@@ -10,8 +10,11 @@ vectorized numpy/Arrow kernels driven by Spark DataFrames:
 - ``operators/`` Spark-side encode/decode passes (applyInPandas /
                  mapInArrow) plus training-data ops (dedup, similarity,
                  text stats).
-- ``sources/``   stripe blob store + lineage manifest (read/write,
-                 idempotent resume).
+- ``sources/``   ORC v1 reader/writer (the one column-tree codec), the
+                 Spark ORC source/sink and the fused parquet scan.
+- ``stripes.py`` native stripes: one-stripe ORC files whose int/string
+                 columns take the smallest codec, extension encodings
+                 (FoR, int-dict, bit-pack, FSST) included.
 - ``functions/`` Spark column helpers (tokenizer, stats sampling).
 - ``plans/``     pipeline orchestration: partition → sample → encode →
                  manifest → verify, codec auto-selection routing.
@@ -35,8 +38,9 @@ def __getattr__(name):
     `read_metadata`         -> `read_metadata` / `orc_file_stats`
     `Predicate` (fork)      -> `Predicate` (stripe + row-group skip)
     `RowSelection` (fork)   -> `RowSelection` (exact skip/select runs)
-    stripe engine           -> `encode_stripe` / `decode_stripe` (+
-                               `encode_stripe_rowgroups` row-group index)
+    stripe engine           -> `encode_stripe` / `decode_stripe` (native
+                               stripes: one-stripe ORC files with
+                               extension codecs)
     CLI bins                -> python -m orc_rust_spark.sources.orc_tools
     """
     lazy = {
@@ -55,10 +59,6 @@ def __getattr__(name):
         "orc_file_stats": ("orc_rust_spark.sources.orc_spark", "orc_file_stats"),
         "encode_stripe": ("orc_rust_spark.stripes", "encode_stripe"),
         "decode_stripe": ("orc_rust_spark.stripes", "decode_stripe"),
-        "encode_stripe_rowgroups": ("orc_rust_spark.stripes",
-                                    "encode_stripe_rowgroups"),
-        "decode_stripe_rowgroups": ("orc_rust_spark.stripes",
-                                    "decode_stripe_rowgroups"),
     }
     if name in lazy:
         import importlib

@@ -93,8 +93,7 @@ class SymbolTable:
         s2 = lens[: len(symbols)] == 2
         self._lut2[(keys[: len(symbols)][s2] >> U64(48)).astype(np.int64)] = codes[s2]
         long = lens >= 3
-        # nonzero length/key ONLY for len>=3 symbols: the frontier parse
-        # gates on (_h3len > 0).any() to detect long symbols
+        # nonzero length/key ONLY for len>=3 symbols
         self._h3len = np.where(long, lens, 0)
         self._h3key = np.where(long, keys, U64(0))
         s3 = long[: len(symbols)]
@@ -103,27 +102,6 @@ class SymbolTable:
         # first symbol (highest gain) claims a contested slot: reversed
         # scatter makes the earliest write the surviving one
         self._h3code[slots[::-1]] = codes[s3][::-1]
-        # per-code gather tables for the frontier parse: one gather each
-        # replaces shift/or/astype chains in the per-round hot loop
-        self._h3shift = ((MAX_LEN - self._h3len) * 8).astype(U64)
-        self._h3packed = ((np.arange(len(self._h3len), dtype=np.int64) << 4)
-                          | self._h3len).astype(np.int32)
-
-    def _lut2p(self) -> np.ndarray:
-        """Packed (code<<4)|len LUT over 2-byte prefixes, merging the
-        1- and 2-byte symbol tables (2-byte symbols take priority —
-        longest match).  Built lazily; used by the frontier parse."""
-        lut = getattr(self, "_lut2p_cache", None)
-        if lut is None:
-            lut = np.zeros(65536, dtype=np.int32)
-            for c, s in enumerate(self.symbols):
-                if len(s) == 1:
-                    lut[s[0] << 8: (s[0] + 1) << 8] = (c << 4) | 1
-            for c, s in enumerate(self.symbols):
-                if len(s) == 2:
-                    lut[(s[0] << 8) | s[1]] = (c << 4) | 2
-            self._lut2p_cache = lut
-        return lut
 
     def match_packed(self, data: np.ndarray) -> np.ndarray:
         """Vectorized longest-match: per position, one int32
@@ -276,231 +254,6 @@ def _parse(data: np.ndarray, table: SymbolTable) -> np.ndarray:
     return out
 
 
-_FRONTIER_MIN = 1 << 17  # below this the all-positions parse wins
-_SEG = 512               # bytes per lockstep chain
-
-
-def _lockstep(data: np.ndarray, table: SymbolTable, win,
-              starts: np.ndarray, ends: np.ndarray,
-              visited: np.ndarray | None):
-    """Advance one greedy chain per row of `starts` in lockstep until
-    each reaches its `ends` position — or, when `visited` is given,
-    lands on a position the speculative parse already visited (resync).
-
-    Matches are constrained only by the end of DATA (a chain's last
-    match may overrun its segment end — exactly like the sequential
-    parse).  Returns (rounds, R, stops, sync): `rounds` holds per-round
-    (chain-row-ids, packed-match, position) triples; `stops` the first
-    position at/past `ends` per chain; `sync` the resync position or -1.
-    """
-    n = len(data)
-    lut2p = table._lut2p()
-    h3code, h3key = table._h3code, table._h3key
-    h3shift, h3packed = table._h3shift, table._h3packed
-    have3 = len(table.symbols) and bool((table._h3len > 0).any())
-    i32_1 = np.int32(1)
-    i32_15 = np.int32(15)
-
-    C = len(starts)
-    P = starts.astype(np.int64, copy=True)
-    ends = ends.astype(np.int64, copy=False)
-    ids = np.arange(C, dtype=np.int64)
-    stops = P.copy()
-    sync = np.full(C, -1, dtype=np.int64)
-    rounds: list[tuple[np.ndarray, np.ndarray, np.ndarray, int]] = []
-    r = 0
-    # a chain may START at/past its end (a previous chain's overrun
-    # consumed a short final segment entirely): it emits nothing
-    done0 = P >= ends
-    if done0.any():
-        keep0 = ~done0
-        P, ends, ids = P[keep0], ends[keep0], ids[keep0]
-    while len(P):
-        if visited is not None:
-            s = visited[P]
-            if s.any():
-                sync[ids[s]] = P[s]
-                stops[ids[s]] = P[s]
-                keep = ~s
-                P, ends, ids = P[keep], ends[keep], ids[keep]
-                if not len(P):
-                    break
-        fk = np.ascontiguousarray(win[P]).view(">u8").ravel() \
-            .astype(U64, copy=False)
-        avail = n - P
-        m = lut2p[(fk >> U64(48)).astype(np.int64)]
-        if have3:
-            key3 = (fk >> U64(40)).astype(np.uint32) * _H3_MULT
-            slot = key3 >> np.uint32(32 - _H3_BITS)
-            c3 = h3code[slot]
-            cc = np.maximum(c3, 0)
-            shift = h3shift[cc]
-            hit = ((fk >> shift) << shift == h3key[cc]) & (c3 >= 0)
-            pk3 = h3packed[cc]
-            hit &= (pk3 & i32_15) <= avail
-            m = np.where(hit, pk3, m)
-        mlen = m & i32_15
-        bad = mlen > avail  # only near end of data
-        if bad.any():
-            m = np.where(bad, np.int32(0), m)
-            mlen = np.where(bad, np.int32(0), mlen)
-        rounds.append((ids, m, P, r))
-        P = P + np.maximum(mlen, i32_1)
-        done = P >= ends
-        if done.any():
-            stops[ids[done]] = P[done]
-            keep = ~done
-            P, ends, ids = P[keep], ends[keep], ids[keep]
-        r += 1
-    return rounds, r, stops, sync
-
-
-def _rounds_matrix(rounds, R: int, C: int):
-    """Chain-major (C*R) matrices of packed matches (-1 = no token) and
-    positions from lockstep rounds."""
-    M = np.full(max(R * C, 1), -1, dtype=np.int32)
-    PP = np.empty(max(R * C, 1), dtype=np.int64)
-    for ids_r, m_r, p_r, rr in rounds:
-        base = ids_r * R + rr
-        M[base] = m_r
-        PP[base] = p_r
-    return M, PP
-
-
-def _parse_frontier(data: np.ndarray, table: SymbolTable) -> np.ndarray:
-    """Greedy parse computing matches ONLY at visited positions —
-    byte-identical output to `_parse`.
-
-    `_parse` matches every byte position (~12 passes over n) although
-    the greedy chain visits only ~19% of them.  Here the input is cut
-    into `_SEG`-byte segments, one speculative greedy chain per
-    segment, all advanced in lockstep (pass A): each round gathers the
-    u64 windows at the frontier positions, probes the packed 2-byte
-    LUT and the lossy 3-byte-prefix hash, emits one token per live
-    chain, and steps; finished chains are compacted away, so element
-    work is O(visited).
-
-    A speculative chain starts at its segment boundary while the TRUE
-    parse enters the segment wherever the previous chain's final match
-    ended.  Pass B walks exactly that tail: from each chain's stop
-    position into the next segment until it lands on a position the
-    speculative chain visited — greedy parsing is self-synchronizing,
-    so from that point the speculative tokens ARE the true parse.  The
-    spliced result (fix-up tokens, then speculative tokens from the
-    sync position on) reproduces the sequential greedy parse exactly;
-    chains that never resync (pathological) fall through to extra
-    waves that re-walk the following boundary."""
-    from numpy.lib.stride_tricks import sliding_window_view
-
-    n = len(data)
-    C = (n + _SEG - 1) // _SEG
-    padded = np.zeros(n + MAX_LEN, dtype=np.uint8)
-    padded[:n] = data
-    win = sliding_window_view(padded, MAX_LEN)
-
-    seg_start = np.arange(C, dtype=np.int64) * _SEG
-    seg_end = np.minimum(seg_start + _SEG, n)
-
-    # pass A: speculative chains
-    rounds, R1, stopsA, _ = _lockstep(data, table, win,
-                                      seg_start, seg_end, None)
-    M, PP = _rounds_matrix(rounds, R1, C)
-    tokA = M >= 0
-    visited = np.zeros(n + MAX_LEN, dtype=bool)
-    visited[PP[tokA]] = True
-
-    # pass B: boundary fix-up waves (chain c's true entry = stop of the
-    # corrected chain c-1).  Wave 1 handles every boundary vectorized;
-    # later waves only run for never-resynced chains (pathological).
-    keep_from = seg_start.copy()           # originals kept from pos >=
-    n1 = np.zeros(C, dtype=np.int64)       # fix-up token count per chain
-    f_tokens = np.empty(0, dtype=np.int32)
-    f_pos = np.empty(0, dtype=np.int64)
-    f_chains = np.empty(0, dtype=np.int64)
-    f_counts = np.empty(0, dtype=np.int64)
-    override: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-    pend_chain = np.arange(1, C, dtype=np.int64)
-    pend_start = stopsA[:-1].copy() if C > 1 else np.empty(0, np.int64)
-    wave = 0
-    while len(pend_chain):
-        b_rounds, R2, stops2, sync2 = _lockstep(
-            data, table, win, pend_start, seg_end[pend_chain], visited)
-        B = len(pend_chain)
-        M2, PP2 = _rounds_matrix(b_rounds, R2, B)
-        maskF = M2[: R2 * B] >= 0
-        counts = maskF.reshape(B, max(R2, 1)).sum(axis=1) if R2 else \
-            np.zeros(B, dtype=np.int64)
-        if wave == 0:
-            f_chains, f_counts = pend_chain, counts
-            f_tokens, f_pos = M2[: R2 * B][maskF], PP2[: R2 * B][maskF]
-        else:
-            cum = np.zeros(B + 1, dtype=np.int64)
-            np.cumsum(counts, out=cum[1:])
-            tf, pf = M2[: R2 * B][maskF], PP2[: R2 * B][maskF]
-            for j in range(B):
-                override[int(pend_chain[j])] = \
-                    (tf[cum[j]: cum[j + 1]], pf[cum[j]: cum[j + 1]])
-        n1[pend_chain] = counts
-        keep_from[pend_chain] = np.where(sync2 >= 0, sync2, n)
-        missed = sync2 < 0
-        nxt = pend_chain[missed] + 1
-        ok = nxt < C
-        pend_chain = nxt[ok]
-        pend_start = stops2[missed][ok]
-        wave += 1
-
-    # assembly: per chain, fix-up tokens then kept speculative tokens
-    chain_of = np.repeat(np.arange(C, dtype=np.int64), R1)
-    keepA = tokA & (PP >= keep_from[chain_of])
-    n2 = keepA.reshape(C, max(R1, 1)).sum(axis=1) if R1 else \
-        np.zeros(C, dtype=np.int64)
-    off = np.zeros(C + 1, dtype=np.int64)
-    np.cumsum(n1 + n2, out=off[1:])
-    total = int(off[-1])
-    tokens = np.empty(total, dtype=np.int32)
-    tpos = np.empty(total, dtype=np.int64)
-    # wave-1 fix-up tokens arrive grouped by ascending chain
-    live = np.array([c not in override for c in f_chains.tolist()],
-                    dtype=bool) if override else np.ones(len(f_chains),
-                                                         dtype=bool)
-    lc, lcounts = f_chains[live], f_counts[live]
-    el = np.repeat(live, f_counts)
-    ltok, lpos_ = f_tokens[el], f_pos[el]
-    totF = int(lcounts.sum())
-    if totF:
-        cf = np.zeros(len(lcounts), dtype=np.int64)
-        np.cumsum(lcounts[:-1], out=cf[1:])
-        idxF = (np.repeat(off[lc], lcounts)
-                + (np.arange(totF, dtype=np.int64) - np.repeat(cf, lcounts)))
-        tokens[idxF] = ltok
-        tpos[idxF] = lpos_
-    for c, (m_c, p_c) in override.items():
-        o = int(off[c])
-        tokens[o: o + len(m_c)] = m_c
-        tpos[o: o + len(m_c)] = p_c
-    # kept speculative tokens are chain-contiguous in the (C,R1) layout
-    totK = int(n2.sum())
-    if totK:
-        chains_k = np.repeat(np.arange(C, dtype=np.int64), n2)
-        cum2 = np.zeros(C, dtype=np.int64)
-        np.cumsum(n2[:-1], out=cum2[1:])
-        rank = np.arange(totK, dtype=np.int64) - np.repeat(cum2, n2)
-        out_idx = off[chains_k] + n1[chains_k] + rank
-        tokens[out_idx] = M[: R1 * C][keepA]
-        tpos[out_idx] = PP[: R1 * C][keepA]
-
-    esc = tokens == 0
-    out_sz = np.where(esc, 2, 1)
-    offs = np.zeros(len(tokens) + 1, dtype=np.int64)
-    np.cumsum(out_sz, out=offs[1:])
-    out = np.empty(int(offs[-1]), dtype=np.uint8)
-    pos0 = offs[:-1]
-    out[pos0[~esc]] = (tokens[~esc] >> np.int32(4)).astype(np.uint8)
-    out[pos0[esc]] = ESCAPE
-    out[pos0[esc] + 1] = data[tpos[esc]]
-    return out
-
-
 def train(data: np.ndarray, iterations: int = 4,
           sample_bytes: int = 1 << 14) -> SymbolTable:
     """Iterative symbol-table construction on a bounded sample (paper §3).
@@ -577,10 +330,7 @@ def fsst_compress_with(data: np.ndarray, table: SymbolTable) -> bytes:
     `fsst_compress` when the table came from `train` on the same data —
     the table is self-describing, so callers may reuse one table for a
     cheap probe estimate AND the full encode without retraining)."""
-    if len(data) >= _FRONTIER_MIN:
-        codes = _parse_frontier(data, table)
-    else:
-        codes = _parse(data, table)
+    codes = _parse(data, table)
     out = bytearray()
     out += table.to_bytes()
     write_varint(out, len(codes))

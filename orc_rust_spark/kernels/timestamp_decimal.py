@@ -1,9 +1,8 @@
-"""Decode-only codecs for ORC timestamps and decimals (SURVEY C13/C14).
+"""Codecs for ORC timestamps and decimals (SURVEY C13/C14).
 
 The reference writer emits neither (its encoder set is
-`src/writer/stripe.rs:173-189`), so like the reference these are
-read-path codecs; our own stripe format stores timestamps as int64
-micros through RLEv2 instead.
+`src/writer/stripe.rs:173-189`); here `OrcWriter` encodes both, for
+`.orc` files and native stripes alike.
 
 Timestamp (`src/encoding/timestamp.rs:30-197`):
   DATA      = seconds since 2015-01-01 epoch, RLEv2 signed

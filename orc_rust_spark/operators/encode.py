@@ -24,7 +24,7 @@ from pyspark import TaskContext
 from pyspark.sql import DataFrame
 import pyspark.sql.types as T
 
-from ..stripes import CODEC_NAMES, ColumnPlan, encode_stripe, wrap_compressed
+from ..stripes import ColumnPlan, encode_stripe
 
 STRIPE_SCHEMA = T.StructType([
     T.StructField("stripe_id", T.StringType(), False),
@@ -57,13 +57,12 @@ def _stripe_row(tbl: pa.Table, part_id: int, seq: int,
                 plans: dict[str, ColumnPlan] | None,
                 block_compression: int = 0) -> dict:
     batch = tbl.combine_chunks().to_batches()[0] if tbl.num_rows else None
-    blob = encode_stripe(batch, plans)
-    if block_compression:
-        blob = wrap_compressed(blob, block_compression)
+    codecs: dict[str, str] = {}
+    blob = encode_stripe(batch, plans, _compression=block_compression,
+                         _codecs=codecs)
     n_tokens = int(pa.compute.sum(
         pa.compute.list_value_length(tbl.column("tokens"))).as_py() or 0)
     doc_ids = tbl.column("doc_id")
-    codecs = _codecs_of(blob)
     return {
         "stripe_id": f"s{part_id:06d}-{seq:05d}",
         "part_id": part_id,
@@ -72,42 +71,12 @@ def _stripe_row(tbl: pa.Table, part_id: int, seq: int,
         "n_tokens": n_tokens,
         "input_bytes": tbl.nbytes,
         "output_bytes": len(blob),
-        "codecs": codecs,
+        "codecs": json.dumps(codecs, sort_keys=True),
         "checksum": hashlib.sha256(blob).hexdigest(),
         "doc_id_min": str(pa.compute.min(doc_ids).as_py()),
         "doc_id_max": str(pa.compute.max(doc_ids).as_py()),
         "blob": blob,
     }
-
-
-def _codecs_of(blob: bytes) -> str:
-    # parse our own header for lineage (cheap: header only).  For a
-    # block-compressed stripe, decompress just the first chunk — the
-    # header always fits in one 256 KiB block
-    from ..stripes import MAGIC, MAGIC_COMPRESSED
-    from ..kernels.util import read_varint
-    if blob[:4] == MAGIC_COMPRESSED:
-        from ..kernels.compression import _decompress_one
-        kind = blob[4]
-        header = int.from_bytes(blob[5:8], "little")
-        body = blob[8: 8 + (header >> 1)]
-        blob = body if header & 1 else _decompress_one(kind, body)
-    buf = memoryview(blob)
-    pos = 4
-    _, pos = read_varint(buf, pos)
-    n_cols, pos = read_varint(buf, pos)
-    codecs = {}
-    for i in range(n_cols):
-        ln, pos = read_varint(buf, pos)
-        name = bytes(buf[pos : pos + ln]).decode()
-        pos += ln
-        codec = buf[pos + 2]
-        pos += 3
-        _, pos = read_varint(buf, pos)
-        # nested children may share names ("item"); qualify duplicates
-        key = name if name not in codecs else f"{name}#{i}"
-        codecs[key] = CODEC_NAMES.get(codec, str(codec))
-    return json.dumps(codecs, sort_keys=True)
 
 
 def encode_batches(batches: Iterator[pa.RecordBatch], part_id: int,

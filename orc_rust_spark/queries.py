@@ -31,7 +31,6 @@ from .functions.tokens import TOKEN_SCHEMA, tokens_from_documents
 from .operators.encode import encode_pass
 from .operators.decode import decode_pass
 from .operators.relation import roundtrip_relation
-from .stripes import ColumnPlan
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -600,13 +599,11 @@ _NESTED_ORACLE = (
 def q_roundtrip_ts2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC two-stream timestamp codec (C14, `src/encoding/timestamp.rs`:
     seconds-from-2015 + nano trailing-zero trick) oracle coverage: the
-    events.ts column is routed through C_TS2 instead of the µs-int64
-    default."""
-    from .stripes import C_TS2
+    events.ts column round-trips through native stripes, which store
+    every timestamp in that layout."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load(spark, sf_dir, "events").select("event_id", "ts")
-    rt = roundtrip_relation(ev, stripe_rows=4096,
-                            plans={"ts": ColumnPlan(codec=C_TS2)})
+    rt = roundtrip_relation(ev, stripe_rows=4096)
     return rt.select(
         "event_id",
         F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"))
@@ -685,14 +682,16 @@ _ORC_FILE_ORACLE = (
 
 def q_decode_rowgroup_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sub-stripe row-group pruning (`src/row_group_filter.rs:51-118`
-    analog): stripes carry per-10k-row per-column min/max; decode skips
-    groups whose bounds cannot intersect the predicate WITHOUT touching
-    their bytes, and a final Catalyst filter exacts the bound.  At 100 TB
-    this is the difference between decoding a 2M-token stripe and the
-    one row group a selective predicate wants."""
+    analog): native stripes written with a ROW_INDEX carry per-4096-row
+    per-column statistics; a predicate decode skips groups whose bounds
+    cannot intersect it WITHOUT touching their bytes, and a final
+    Catalyst filter exacts the bound.  At 100 TB this is the difference
+    between decoding a 2M-token stripe and the one row group a
+    selective predicate wants."""
     import pyarrow as pa  # noqa: F401  (worker-side)
     import pyspark.sql.types as T
-    from .stripes import decode_stripe_rowgroups, encode_stripe_rowgroups
+    from .sources.orc_reader import read_orc
+    from .stripes import _NativeWriter
 
     # bounds chosen inside the SMALLEST sf's key range (sf0.001 tops
     # out at 1499) so the gate exercises keep-AND-skip at every scale —
@@ -702,12 +701,16 @@ def q_decode_rowgroup_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_orderkey", "l_partkey", "l_quantity")
 
     def enc(batches):
+        import io
         import pyarrow as pa
         for b in batches:
             if b.num_rows == 0:
                 continue
-            blob = encode_stripe_rowgroups(b, group_rows=4096)
-            yield pa.record_batch([pa.array([blob], pa.binary())],
+            sink = io.BytesIO()
+            w = _NativeWriter(sink, b.schema, row_index_stride=4096)
+            w.write_batch(b)
+            w.close()
+            yield pa.record_batch([pa.array([sink.getvalue()], pa.binary())],
                                   names=["blob"])
 
     stripes = li.mapInArrow(
@@ -723,10 +726,9 @@ def q_decode_rowgroup_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         for b in batches:
             col = b.column("blob")
             for i in range(b.num_rows):
-                out = decode_stripe_rowgroups(
-                    col[i].as_py(), predicate={"l_orderkey": (lo, hi)})
-                if out.num_rows:
-                    yield out
+                out = read_orc(col[i].as_buffer(),
+                               predicate={"l_orderkey": (lo, hi)})
+                yield from out.to_batches()
 
     decoded = stripes.mapInArrow(dec, out_schema)
     return decoded.filter((F.col("l_orderkey") >= lo)

@@ -3,20 +3,21 @@
 Parses the ORC tail (PostScript / Footer protobufs, layout per the
 public ORC spec and `src/reader/metadata.rs:180-247` of the reference),
 walks each stripe's footer to locate per-column streams
-(`src/stripe.rs:311-336`), and decodes them through the SAME kernel
-functions our stripe format uses (RLEv1/RLEv2, byte-RLE, boolean
-bit-RLE, IEEE floats, decimal varints, two-stream timestamps, string
-direct/dictionary).  This is the cross-implementation parity gate: the
-checked-in `.orc` fixtures under `/root/reference/tests/basic/data`
-were written by Java/C++/pyorc writers, so value-equality against
-`pyarrow.orc` on them proves the kernels decode real ORC byte streams,
-not just our own round-trips (`tests/basic/main.rs:618-662` analog).
-
-Scope: a correctness oracle, not a scan operator — the Spark-scale read
-path is parquet; this exists to pin kernel parity end-to-end.
+(`src/stripe.rs:311-336`), and decodes them through the engine's
+kernels (RLEv1/RLEv2, byte-RLE, boolean bit-RLE, IEEE floats, decimal
+varints, two-stream timestamps, string direct/dictionary, plus the
+extension encodings of native stripes: FoR, int dictionary, bit-pack,
+FSST).  It is the one column-tree decoder: `.orc` files from any writer
+and native stripes (one-stripe ORC files held in memory,
+`stripes.decode_stripe`) both decode here.  Value-equality against
+`pyarrow.orc` on files from Java/C++/pyorc writers proves the kernels
+decode real ORC byte streams, not just our own round-trips
+(`tests/basic/main.rs:618-662` analog).
 """
 
 from __future__ import annotations
+
+import os
 
 import numpy as np
 import pyarrow as pa
@@ -25,6 +26,8 @@ from ..kernels.boolean import boolean_decode
 from ..kernels.byte_rle import byte_rle_decode
 from ..kernels.compression import decompress_stream
 from ..kernels.float_codec import float_decode
+from ..kernels.for_codec import bitpack_decode, for_decode, int_dict_decode
+from ..kernels.fsst import fsst_decompress
 from ..kernels.rle_v1 import rle_v1_decode
 from ..kernels.rle_v2 import rle_v2_decode
 from ..kernels.timestamp_decimal import (decimal_decode,
@@ -32,10 +35,16 @@ from ..kernels.timestamp_decimal import (decimal_decode,
 from ..kernels.util import ValueSpan, read_varint, unwrap_span
 
 from .orc_format import (  # noqa: F401  (shared spec enums)
+    ENC_BITPACK,
     ENC_DICT,
     ENC_DICT_V2,
+    ENC_DICTS,
     ENC_DIRECT,
     ENC_DIRECT_V2,
+    ENC_FOR,
+    ENC_FSST,
+    ENC_INT_DICT,
+    ENC_RLE_V2,
     K_DATA,
     K_DICT_DATA,
     K_LENGTH,
@@ -204,13 +213,16 @@ class OrcMeta:
         return False  # other writers: no validated hash contract
 
 
-def read_metadata(path: str) -> OrcMeta:
+def read_metadata(path) -> OrcMeta:
     """Tail-only parse: PostScript -> Footer (+ Metadata stats).  Reads
     at most the file tail, never the stripe bytes — the driver calls
     this once per file to plan stripe splits, so it must stay O(tail)
     regardless of file size (`src/reader/metadata.rs:180-247` reads a
-    fixed probe then extends the same way)."""
-    import os
+    fixed probe then extends the same way).  `path` may instead be an
+    in-memory ORC file (bytes, memoryview, pa.Buffer), parsed in place
+    without a copy."""
+    if not isinstance(path, (str, os.PathLike)):
+        return _open_buffer(path)[1]
     size = os.path.getsize(path)
     if size < 4:  # "ORC" magic + 1-byte postscript length at minimum
         raise ValueError(
@@ -226,6 +238,40 @@ def read_metadata(path: str) -> OrcMeta:
         if need > probe:
             f.seek(size - min(size, need))
             data = f.read(min(size, need))
+    return _parse_tail(data)
+
+
+def _open_buffer(buf) -> tuple[memoryview, OrcMeta]:
+    """A whole ORC file held in memory (bytes, memoryview, pa.Buffer)
+    -> (unsigned byte view, metadata), without copying the buffer."""
+    data = memoryview(buf)
+    # pa.Buffer views are signed ('b'): byte reads >= 128 would come
+    # back negative in every varint parse.  Slices of the unsigned view
+    # stay unsigned.
+    if data.format != "B":
+        data = data.cast("B")
+    if bytes(data[:3]) != b"ORC":
+        raise ValueError("bad ORC magic: not an ORC file")
+    ps_len = data[-1]
+    try:
+        magic = _one(_pb_parse(data[-1 - ps_len: -1]), 8000, b"")
+    except (ValueError, IndexError):
+        magic = None
+    if len(data) < ps_len + 4 or magic != b"ORC":
+        raise ValueError("truncated ORC buffer: no postscript magic")
+    meta = _parse_tail(data)
+    for si in meta.stripes:
+        end = si["offset"] + si["index_length"] + si["data_length"] \
+            + si["footer_length"]
+        if end > len(data):
+            raise ValueError(f"truncated ORC buffer: stripe ends at {end}, "
+                             f"buffer has {len(data)} bytes")
+    return data, meta
+
+
+def _parse_tail(data) -> OrcMeta:
+    """PostScript -> Footer (+ Metadata stats) from bytes that end where
+    the file ends."""
     ps_len = data[-1]
     ps = _pb_parse(data[-1 - ps_len: -1])
     footer_len = _one(ps, 1)
@@ -330,10 +376,13 @@ def _stripe_layout(data, meta: OrcMeta, si: dict):
     return spans, encodings, writer_tz
 
 
-def _streams_from_spans(data, meta: OrcMeta, spans) -> dict:
+def _streams_from_spans(data, meta: OrcMeta, spans, cids=None) -> dict:
+    """Value streams of the columns in `cids` (all when None): the
+    streams of unprojected columns are never sliced or decompressed."""
     streams = {}
     for (col, kind), (off, ln) in spans.items():
-        if kind in (K_PRESENT, K_DATA, K_LENGTH, K_DICT_DATA, K_SECONDARY):
+        if kind in (K_PRESENT, K_DATA, K_LENGTH, K_DICT_DATA, K_SECONDARY) \
+                and (cids is None or col in cids):
             raw = data[off: off + ln]
             if meta.compression:
                 raw = decompress_stream(raw, meta.compression,
@@ -342,11 +391,11 @@ def _streams_from_spans(data, meta: OrcMeta, spans) -> dict:
     return streams
 
 
-def _stripe_streams(data, meta: OrcMeta, si: dict):
+def _stripe_streams(data, meta: OrcMeta, si: dict, cids=None):
     """-> ({(column, kind): bytes}, {column: (enc_kind, dict_size)},
     writer_tz or None)"""
     spans, encodings, writer_tz = _stripe_layout(data, meta, si)
-    return _streams_from_spans(data, meta, spans), encodings, writer_tz
+    return _streams_from_spans(data, meta, spans, cids), encodings, writer_tz
 
 
 def _parse_row_index(data, meta: OrcMeta, spans, cids):
@@ -530,15 +579,32 @@ def _timestamp_array(seconds: np.ndarray, nanos: np.ndarray, unit: str,
     return pa.array(v, pa.int64(), mask=m).cast(pa.timestamp(unit))
 
 
-def _ints(buf, n: int, enc: int, signed: bool) -> np.ndarray:
+# extension integer codecs: each stream is one self-sized blob
+_INT_CODECS = {ENC_FOR: for_decode, ENC_BITPACK: bitpack_decode,
+               ENC_INT_DICT: int_dict_decode}
+
+
+def _ints(buf, n: int, enc: int, signed: bool,
+          dtype=np.int64) -> np.ndarray:
+    """An integer stream of column encoding `enc`, decoded straight to
+    `dtype` (int32 columns skip a full-length int64 pass)."""
     # a ValueSpan marks a row-group slice of an externally written
     # stream: decode-and-discard its leading in-run values, and let the
     # final run overshoot (group ends need not align with runs)
     span = isinstance(buf, ValueSpan)
     buf, skip = unwrap_span(buf)
-    dec = rle_v2_decode if enc in (ENC_DIRECT_V2, ENC_DICT_V2) \
-        else rle_v1_decode
-    vals = dec(buf, n + skip, signed=signed, exact=not span)
+    if enc in _INT_CODECS:
+        vals = _INT_CODECS[enc](buf)
+        if len(vals) < n + skip or (not span and len(vals) != n):
+            raise ValueError(f"integer stream holds {len(vals)} values, "
+                             f"expected {n}")
+        return vals[skip: skip + n].astype(dtype, copy=False)
+    if enc in ENC_RLE_V2:
+        vals = rle_v2_decode(buf, n + skip, signed=signed, exact=not span,
+                             out_dtype=dtype)
+    else:
+        vals = rle_v1_decode(buf, n + skip, signed=signed,
+                             exact=not span).astype(dtype, copy=False)
     return vals[skip:] if skip else vals
 
 
@@ -568,9 +634,16 @@ def _respace(vals: np.ndarray, validity, n: int) -> tuple[np.ndarray, np.ndarray
     return out, ~validity
 
 
+_INT_KINDS = {TK_SHORT: (np.int16, pa.int16()), TK_INT: (np.int32, pa.int32()),
+              TK_LONG: (np.int64, pa.int64()),
+              TK_DATE: (np.int32, pa.date32())}
+
+
 def _decode_column(cid: int, meta: OrcMeta, streams, encodings, n: int,
                    writer_tz: str | None = None,
-                   ts_unit: str = "ns") -> pa.Array:
+                   ts_units: dict[int, str] | None = None) -> pa.Array:
+    """Decode column `cid` (and its subtree) to `n` rows.  `ts_units`
+    maps timestamp column ids to their unit (default 'ns')."""
     t = meta.types[cid]
     kind = t["kind"]
     enc, dict_size = encodings.get(cid, (ENC_DIRECT, 0))
@@ -591,7 +664,7 @@ def _decode_column(cid: int, meta: OrcMeta, streams, encodings, n: int,
         children, names = [], []
         for sub, fname in zip(t["subtypes"], t["field_names"]):
             children.append(_decode_column(sub, meta, streams, encodings,
-                                           n_valid, writer_tz, ts_unit))
+                                           n_valid, writer_tz, ts_units))
             names.append(fname)
         st = pa.StructArray.from_arrays(children, names)
         if validity is None:
@@ -614,12 +687,12 @@ def _decode_column(cid: int, meta: OrcMeta, streams, encodings, n: int,
         poff = pa.array(offsets.astype(np.int32), pa.int32())
         if kind == TK_LIST:
             child = _decode_column(t["subtypes"][0], meta, streams,
-                                   encodings, total, writer_tz, ts_unit)
+                                   encodings, total, writer_tz, ts_units)
             return pa.ListArray.from_arrays(poff, child, mask=mask)
         keys = _decode_column(t["subtypes"][0], meta, streams, encodings,
-                              total, writer_tz, ts_unit)
+                              total, writer_tz, ts_units)
         vals = _decode_column(t["subtypes"][1], meta, streams, encodings,
-                              total, writer_tz, ts_unit)
+                              total, writer_tz, ts_units)
         arr = pa.MapArray.from_arrays(poff, keys, vals)
         if mask is not None:
             idx = np.arange(n, dtype=np.int64)
@@ -634,14 +707,11 @@ def _decode_column(cid: int, meta: OrcMeta, streams, encodings, n: int,
         vals = _byte_rle(data(), n_valid).view(np.int8)
         v, m = _respace(vals, validity, n)
         return pa.array(v, pa.int8(), mask=m)
-    if kind in (TK_SHORT, TK_INT, TK_LONG, TK_DATE):
-        vals = _ints(data(), n_valid, enc, signed=True)
-        at = {TK_SHORT: pa.int16(), TK_INT: pa.int32(), TK_LONG: pa.int64(),
-              TK_DATE: pa.date32()}[kind]
-        v, m = _respace(vals, validity, n)
-        if kind == TK_DATE:
-            return pa.array(v.astype(np.int32), pa.int32(), mask=m).cast(at)
-        return pa.array(v, pa.int64(), mask=m).cast(at)
+    if kind in _INT_KINDS:
+        dt, at = _INT_KINDS[kind]
+        v, m = _respace(_ints(data(), n_valid, enc, signed=True, dtype=dt),
+                        validity, n)
+        return pa.array(v, at, mask=m)
     if kind in (TK_FLOAT, TK_DOUBLE):
         dt = np.float32 if kind == TK_FLOAT else np.float64
         vals = float_decode(data(), n_valid, dt)
@@ -674,14 +744,15 @@ def _decode_column(cid: int, meta: OrcMeta, streams, encodings, n: int,
                 arr.validate(full=True)
             return arr
 
-        if enc in (ENC_DICT, ENC_DICT_V2):
+        if enc in ENC_DICTS:
             dict_lengths = _ints(data(K_LENGTH), dict_size, enc, signed=False)
             dict_arr = _var_array(dict_lengths, data(K_DICT_DATA))
-            idx = _ints(data(), n_valid, enc, signed=False)
-            vals_arr = dict_arr.take(pa.array(idx, pa.int64()))
+            idx = _ints(data(), n_valid, enc, signed=False, dtype=np.int32)
+            vals_arr = dict_arr.take(pa.array(idx, pa.int32()))
         else:
             lengths = _ints(data(K_LENGTH), n_valid, enc, signed=False)
-            vals_arr = _var_array(lengths, data())
+            blob = fsst_decompress(data()) if enc == ENC_FSST else data()
+            vals_arr = _var_array(lengths, blob)
         if validity is None:
             return vals_arr
         take_idx = np.full(n, -1, dtype=np.int64)
@@ -747,7 +818,7 @@ def _decode_column(cid: int, meta: OrcMeta, streams, encodings, n: int,
                 sel = sel & validity
             cnt = int(sel.sum())
             dense = _decode_column(sub, meta, streams, encodings, cnt,
-                                   writer_tz, ts_unit)
+                                   writer_tz, ts_units)
             idx = np.full(n, -1, dtype=np.int64)
             idx[sel] = np.arange(cnt, dtype=np.int64)
             children.append(dense.take(pa.array(idx, pa.int64(),
@@ -764,7 +835,8 @@ def _decode_column(cid: int, meta: OrcMeta, streams, encodings, n: int,
             skip_data=dskip, skip_secondary=sskip, exact=not tol)
         if kind == TK_TIMESTAMP and writer_tz is not None:
             secs = _tz_to_utc_seconds(secs, writer_tz)
-        return _timestamp_array(secs, nanos, ts_unit, validity, n)
+        return _timestamp_array(secs, nanos, (ts_units or {}).get(cid, "ns"),
+                                validity, n)
     raise TypeError(f"unsupported ORC type kind {kind} (column {cid})")
 
 
@@ -832,8 +904,9 @@ def arrow_schema(meta: OrcMeta,
 def _ts_unit_map(meta: OrcMeta, want_cids: list[int],
                  schema: pa.Schema | None, default: str) -> dict[int, str]:
     """Per-column timestamp representation for the PROJECTED columns:
-    `timestamp_precision` for every timestamp column, overridden per
-    column by a requested `schema` whose field (matched POSITIONALLY,
+    `timestamp_precision` for every timestamp column in their subtrees
+    (nested ones included), overridden per top-level timestamp column
+    by a requested `schema` whose field (matched POSITIONALLY,
     like the reference's with_schema, which replaces the derived
     schema wholesale) is a timestamp (its unit) or Decimal128(38,9)
     (the reference's nanoseconds-as-decimal representation)."""
@@ -843,8 +916,10 @@ def _ts_unit_map(meta: OrcMeta, want_cids: list[int],
             f"got {default!r}")
     units: dict[int, str] = {}
     for cid in want_cids:
-        if meta.types[cid]["kind"] in (TK_TIMESTAMP, TK_TIMESTAMP_INSTANT):
-            units[cid] = default
+        for sub in _subtree_cids(meta, cid):
+            if meta.types[sub]["kind"] in (TK_TIMESTAMP,
+                                           TK_TIMESTAMP_INSTANT):
+                units[sub] = default
     if schema is not None:
         if len(schema) != len(want_cids):
             raise ValueError(
@@ -876,7 +951,7 @@ def _finalize_table(tbl: pa.Table, schema: pa.Schema | None) -> pa.Table:
     return tbl.rename_columns(schema.names).cast(schema)
 
 
-def read_orc(path: str, columns: list[str] | None = None,
+def read_orc(path, columns: list[str] | None = None,
              predicate: dict[str, tuple] | None = None,
              stripe_indices: list[int] | None = None,
              row_selection=None,
@@ -884,6 +959,8 @@ def read_orc(path: str, columns: list[str] | None = None,
              timestamp_precision: str = "ns",
              _stats: dict | None = None) -> pa.Table:
     """Decode a real ORC file to an Arrow table using the engine kernels.
+    `path` is a file path or a whole ORC file in memory (bytes,
+    memoryview, pa.Buffer — e.g. a native stripe), read without a copy.
 
     `columns` projects top-level fields (the `ProjectionMask` analog —
     unprojected columns' streams are never decoded).  `predicate` is
@@ -926,7 +1003,10 @@ def read_orc(path: str, columns: list[str] | None = None,
     DECODER's unit directly — sub-unit values error rather than
     truncate — and remaining fields are cast safely (lossy coercions
     raise)."""
-    meta = read_metadata(path)
+    if isinstance(path, (str, os.PathLike)):
+        meta, data = read_metadata(path), None
+    else:
+        data, meta = _open_buffer(path)
     if stripe_indices is not None:
         sel = [meta.stripes[i] for i in sorted(set(stripe_indices))
                if 0 <= i < len(meta.stripes)]
@@ -934,13 +1014,14 @@ def read_orc(path: str, columns: list[str] | None = None,
             return _finalize_table(
                 arrow_schema(meta, columns, timestamp_precision)
                 .empty_table(), schema)
-        lo = min(s["offset"] for s in sel)
-        hi = max(s["offset"] + s["index_length"] + s["data_length"]
-                 + s["footer_length"] for s in sel)
-        with open(path, "rb") as f:
-            f.seek(lo)
-            data = _SpanBytes(f.read(hi - lo), lo)
-    else:
+        if data is None:
+            lo = min(s["offset"] for s in sel)
+            hi = max(s["offset"] + s["index_length"] + s["data_length"]
+                     + s["footer_length"] for s in sel)
+            with open(path, "rb") as f:
+                f.seek(lo)
+                data = _SpanBytes(f.read(hi - lo), lo)
+    elif data is None:
         with open(path, "rb") as f:
             data = f.read()
     names, root_cids = _root_fields(meta)
@@ -948,13 +1029,9 @@ def read_orc(path: str, columns: list[str] | None = None,
             if columns is None or nm in columns]
     ts_units = _ts_unit_map(meta, [root_cids[i] for i in want], schema,
                             timestamp_precision)
-    pred = None
     # column id of a root child is its subtype index
     col_to_cid = {nm: root_cids[i] for i, nm in enumerate(names)}
-    if predicate is not None:
-        from .predicate import Predicate
-        pred = Predicate.from_range_dict(predicate) \
-            if isinstance(predicate, dict) else predicate
+    pred = _as_predicate(predicate, meta)
     want_stripes = set(stripe_indices) if stripe_indices is not None else None
     sel_rest = None
     if row_selection is not None:
@@ -965,6 +1042,9 @@ def read_orc(path: str, columns: list[str] | None = None,
                 f"row_selection covers {row_selection.row_count()} rows, "
                 f"file has {total_rows}")
         sel_rest = RowSelection(list(row_selection.selectors))
+    out_names = [names[i] for i in want]
+    want_cids = [root_cids[i] for i in want]
+    need_cids = {c for cid in want_cids for c in _subtree_cids(meta, cid)}
     batches = []
     for sidx, si in enumerate(meta.stripes):
         n = si["n_rows"]
@@ -984,8 +1064,6 @@ def read_orc(path: str, columns: list[str] | None = None,
 
             if not pred.evaluate(stats_of):
                 continue
-        out_names = [names[i] for i in want]
-        want_cids = [root_cids[i] for i in want]
         # sub-stripe skip: with a predicate or selection and a row
         # index, decode only the row groups whose statistics may match
         # and whose selection slice selects rows
@@ -1002,13 +1080,14 @@ def read_orc(path: str, columns: list[str] | None = None,
             if got is not None:
                 batches.extend(got)
                 continue
-            streams = _streams_from_spans(data, meta, spans)
+            streams = _streams_from_spans(data, meta, spans, need_cids)
         if streams is None:
-            streams, encodings, writer_tz = _stripe_streams(data, meta, si)
+            streams, encodings, writer_tz = _stripe_streams(
+                data, meta, si, need_cids)
         if _stats is not None:
             _stats["rows_decoded"] = _stats.get("rows_decoded", 0) + n
         cols = [_decode_column(cid, meta, streams, encodings, n, writer_tz,
-                               ts_units.get(cid, "ns"))
+                               ts_units)
                 for cid in want_cids]
         tb = pa.table(cols, names=out_names)
         if sel_has_skips:
@@ -1023,6 +1102,40 @@ def read_orc(path: str, columns: list[str] | None = None,
     return _finalize_table(pa.concat_tables(batches), schema)
 
 
+_STRING_KINDS = (TK_STRING, TK_VARCHAR, TK_CHAR)
+_NUMBER_KINDS = (TK_BYTE, TK_SHORT, TK_INT, TK_LONG, TK_FLOAT, TK_DOUBLE)
+
+
+def _as_predicate(predicate, meta: OrcMeta):
+    """A `Predicate` AST or {col: (lo, hi)} range dict -> Predicate,
+    with each comparison's literal checked against its column's type.
+    A string bound on a numeric column (or a numeric bound on a string
+    column) raises TypeError: its statistics could never prune, so the
+    mismatch is almost surely a caller bug.  Int and float bounds mix
+    freely on numeric columns."""
+    if predicate is None:
+        return None
+    from .predicate import Predicate
+    pred = Predicate.from_range_dict(predicate) \
+        if isinstance(predicate, dict) else predicate
+    names, root_cids = _root_fields(meta)
+    kinds = {nm: meta.types[cid]["kind"] for nm, cid in zip(names, root_cids)}
+
+    def check(p):
+        kind = kinds.get(p.column)
+        if p.kind == "cmp" and kind is not None and p.value is not None:
+            is_str = isinstance(p.value, (str, bytes))
+            if (kind in _STRING_KINDS and not is_str) or \
+                    (kind in _NUMBER_KINDS and is_str):
+                raise TypeError(
+                    f"predicate bound {p.value!r} does not match the type "
+                    f"of column {p.column!r}")
+        for c in p.children:
+            check(c)
+    check(pred)
+    return pred
+
+
 def stripes_matching(meta: OrcMeta, predicate) -> list[int]:
     """Planning-time stripe pruning: indices of stripes whose Metadata-
     section statistics may contain predicate-matching rows.  Lets a
@@ -1033,9 +1146,7 @@ def stripes_matching(meta: OrcMeta, predicate) -> list[int]:
     recorded statistics are conservatively kept."""
     if predicate is None or not meta.stripes:
         return list(range(len(meta.stripes)))
-    from .predicate import Predicate
-    pred = Predicate.from_range_dict(predicate) \
-        if isinstance(predicate, dict) else predicate
+    pred = _as_predicate(predicate, meta)
     names, root_cids = _root_fields(meta)
     col_to_cid = dict(zip(names, root_cids))
     keep = []
@@ -1142,8 +1253,7 @@ def _decode_row_groups(data, meta, spans, encodings, writer_tz, si,
         if not any((cid, k) in spans for k in (K_PRESENT, K_DATA, K_LENGTH,
                                                K_SECONDARY)):
             continue  # struct with no own streams
-        dict_encoded = encodings.get(cid, (ENC_DIRECT, 0))[0] in (
-            ENC_DICT, ENC_DICT_V2)
+        dict_encoded = encodings.get(cid, (ENC_DIRECT, 0))[0] in ENC_DICTS
         lay = _positions_layout(meta, spans, cid, dict_encoded)
         if lay is None:
             return None
@@ -1320,8 +1430,7 @@ def _decode_row_groups(data, meta, spans, encodings, writer_tz, si,
         if _stats is not None:
             _stats["rows_decoded"] = _stats.get("rows_decoded", 0) + dec_n
         cols = [_decode_column(cid, meta, streams, encodings, dec_n,
-                               writer_tz,
-                               (ts_units or {}).get(cid, "ns"))
+                               writer_tz, ts_units)
                 for cid in want_cids]
         tb = pa.table(cols, names=out_names)
         if gsel is not None and gsel.skipped_row_count():

@@ -13,10 +13,14 @@ decimals as varint mantissas + RLEv2 scales, timestamps as the
 two-stream 2015-epoch layout, nested struct/list/map as parent
 PRESENT + child columns, PRESENT bit-RLE only when a column has nulls.
 
-Compression: NONE or chunked zlib; one stripe per `write_batch` call.
+Compression: NONE or any ORC chunked codec the kernels write; one
+stripe per `write_batch` call.  Native stripes (`stripes.py`) are
+written by this same column walker with extension leaf encodings.
 """
 
 from __future__ import annotations
+
+import os
 
 import numpy as np
 import pyarrow as pa
@@ -34,6 +38,7 @@ from .orc_format import (  # noqa: F401  (shared spec enums)
     ENC_DICT_V2,
     ENC_DIRECT,
     ENC_DIRECT_V2,
+    ENC_RLEV2,
     K_DATA,
     K_DICT_DATA,
     K_LENGTH,
@@ -190,16 +195,69 @@ def _build_types(schema: pa.Schema):
 # column stream encoding (one stripe)
 # ---------------------------------------------------------------------------
 
-def _binary_parts(valid: pa.Array):
+def _direct_streams(valid: pa.Array, interop: bool = True) -> list:
+    """DIRECT_V2 streams of a string/binary array: the concatenated
+    bytes and the RLEv2 value lengths."""
     lb = valid.cast(pa.large_binary())
     n = len(lb)
-    if not n:
-        return b"", np.empty(0, dtype=np.int64)
-    offs = np.frombuffer(lb.buffers()[1], dtype=np.int64)
-    offs = offs[lb.offset: lb.offset + n + 1]
-    dbuf = lb.buffers()[2]
-    blob = bytes(memoryview(dbuf)[offs[0]: offs[-1]]) if dbuf else b""
-    return blob, np.diff(offs)
+    blob, lengths = b"", np.empty(0, dtype=np.int64)
+    if n:
+        offs = np.frombuffer(lb.buffers()[1], dtype=np.int64)
+        offs = offs[lb.offset: lb.offset + n + 1]
+        dbuf = lb.buffers()[2]
+        blob = bytes(memoryview(dbuf)[offs[0]: offs[-1]]) if dbuf else b""
+        lengths = np.diff(offs)
+    return [(K_DATA, blob),
+            (K_LENGTH, rle_v2_encode(lengths, signed=False, interop=interop))]
+
+
+def _dict_pays(valid: pa.Array) -> bool:
+    """Sampled cardinality check: dictionary-encode when at most half
+    of a ~1024-value sample is distinct."""
+    n = len(valid)
+    if n <= 64:
+        return False
+    sample = valid.take(np.arange(0, n, max(n // 1024, 1)))
+    return len(sample.unique()) <= max(len(sample) // 2, 1)
+
+
+def _dictionary_streams(valid: pa.Array,
+                        interop: bool = True) -> tuple[int, list]:
+    """DICTIONARY_V2 streams of a string/binary array -> (dictionary
+    size, streams): RLEv2 indices into the sorted dictionary, RLEv2
+    dictionary lengths, dictionary bytes."""
+    dct = valid.dictionary_encode()
+    uniq = dct.dictionary.cast(pa.binary()).to_pylist()
+    order = np.argsort(np.array(uniq, dtype=object))
+    rank = np.empty_like(order)
+    rank[order] = np.arange(len(order))
+    indices = rank[dct.indices.to_numpy(zero_copy_only=False).astype(np.int64)]
+    uniq = [uniq[i] for i in order]
+    lengths = np.fromiter(map(len, uniq), np.int64, len(uniq))
+    return len(uniq), [
+        (K_DATA, rle_v2_encode(indices, signed=False, interop=interop)),
+        (K_LENGTH, rle_v2_encode(lengths, signed=False, interop=interop)),
+        (K_DICT_DATA, b"".join(uniq))]
+
+
+def _decimal_mantissas(arr: pa.Array):
+    """Mantissas of a decimal128 array (no nulls): an int64 ndarray
+    when every value's high word is the low word's sign extension
+    (precision <= 18 always is — validated, not assumed), else a list
+    of exact python ints reassembled from the 16-byte little-endian
+    pairs (the varint encoder is unbounded, so precision > 18 columns
+    cost a per-value loop but lose nothing)."""
+    n = len(arr)
+    if n == 0:
+        return np.empty(0, dtype=np.int64)
+    pairs = np.frombuffer(arr.buffers()[1], dtype=np.int64)
+    lo = pairs[2 * arr.offset: 2 * (arr.offset + n): 2]
+    hi = pairs[2 * arr.offset + 1: 2 * (arr.offset + n) + 1: 2]
+    if not np.array_equal(hi, lo >> np.int64(63)):
+        lo_u = lo.view(np.uint64)
+        return [(int(h) << 64) | int(lu)
+                for h, lu in zip(hi.tolist(), lo_u.tolist())]
+    return lo.copy()
 
 
 def _utc_to_writer_frame_us(us: np.ndarray, tz_name: str) -> np.ndarray:
@@ -219,147 +277,6 @@ def _utc_to_writer_frame_us(us: np.ndarray, tz_name: str) -> np.ndarray:
              .replace(tzinfo=tz).timestamp()) - int(s) for s in uniq],
         dtype=np.int64)
     return us + shift[inv] * np.int64(1_000_000)
-
-
-def _encode_tree(arr: pa.Array, cid: int, types, out_streams, encodings,
-                 writer_tz: str | None = None, force_present: bool = False,
-                 no_dict: bool = False, defer_bits: bool = False) -> None:
-    """Emit streams for column `cid` and recurse into children.
-
-    ORC stores child values only for rows where the parent is present,
-    so nested recursion filters by the parent's validity first."""
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    kind = types[cid][0]
-    enc = ENC_DIRECT_V2
-    if kind == TK_UNION:
-        # ORC unions carry no PRESENT here (arrow unions have no
-        # validity): a byte TAG stream + DENSE children (each child
-        # holds only the rows of its tag, `union.rs:36-163`)
-        if arr.type.mode != "sparse":
-            raise TypeError("only sparse unions are supported")
-        comb = arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
-        tags = np.asarray(comb.type_codes, dtype=np.int8)
-        out_streams.append((cid, K_DATA, byte_rle_encode(tags)))
-        for i, sub in enumerate(types[cid][1]):
-            dense = comb.field(i).filter(pa.array(tags == i))
-            # children keep force_present: row-index mode needs stream
-            # sets identical across groups even when a child's nulls
-            # appear in only some of them
-            _encode_tree(dense, sub, types, out_streams, encodings,
-                         writer_tz, force_present, no_dict, defer_bits)
-        encodings[cid] = (ENC_DIRECT, 0)
-        return
-    if arr.null_count or (force_present and cid != 0):
-        validity = np.asarray(arr.is_valid())
-        out_streams.append((cid, K_PRESENT,
-                            ("__bits__", validity) if defer_bits
-                            else boolean_encode(validity)))
-        valid = arr.drop_null()
-    else:
-        validity = None
-        valid = arr
-
-    if kind == TK_STRUCT:
-        enc = ENC_DIRECT
-        for sub, i in zip(types[cid][1], range(len(types[cid][1]))):
-            child = valid.field(i) if cid != 0 else arr.field(i)
-            _encode_tree(child, sub, types, out_streams, encodings, writer_tz,
-                         force_present, no_dict, defer_bits)
-    elif kind == TK_LIST:
-        lv = valid.cast(pa.large_list(valid.type.value_type)) \
-            if pa.types.is_list(valid.type) else valid
-        lengths = lv.value_lengths().to_numpy(zero_copy_only=False).astype(np.int64)
-        out_streams.append((cid, K_LENGTH,
-                            rle_v2_encode(lengths, signed=False, interop=True)))
-        _encode_tree(lv.flatten(), types[cid][1][0], types, out_streams,
-                     encodings, writer_tz, force_present, no_dict, defer_bits)
-    elif kind == TK_MAP:
-        t = valid.type
-        lv = valid.cast(pa.list_(pa.struct([("key", t.key_type),
-                                            ("value", t.item_type)])))
-        lengths = lv.value_lengths().to_numpy(zero_copy_only=False).astype(np.int64)
-        out_streams.append((cid, K_LENGTH,
-                            rle_v2_encode(lengths, signed=False, interop=True)))
-        entries = lv.flatten()
-        _encode_tree(entries.field(0), types[cid][1][0], types, out_streams,
-                     encodings, writer_tz, force_present, no_dict, defer_bits)
-        _encode_tree(entries.field(1), types[cid][1][1], types, out_streams,
-                     encodings, writer_tz, force_present, no_dict, defer_bits)
-    elif kind == TK_BOOL:
-        enc = ENC_DIRECT
-        vals = valid.to_numpy(zero_copy_only=False).astype(bool)
-        out_streams.append((cid, K_DATA,
-                            ("__bits__", vals) if defer_bits
-                            else boolean_encode(vals)))
-    elif kind == TK_BYTE:
-        enc = ENC_DIRECT
-        vals = valid.to_numpy(zero_copy_only=False).astype(np.int8)
-        out_streams.append((cid, K_DATA, byte_rle_encode(vals)))
-    elif kind in (TK_SHORT, TK_INT, TK_LONG, TK_DATE):
-        if kind == TK_DATE:
-            valid = valid.cast(pa.int32())
-        vals = valid.cast(pa.int64()).to_numpy(zero_copy_only=False)
-        out_streams.append((cid, K_DATA,
-                            rle_v2_encode(vals, signed=True, interop=True)))
-    elif kind in (TK_FLOAT, TK_DOUBLE):
-        enc = ENC_DIRECT
-        dt = np.float32 if kind == TK_FLOAT else np.float64
-        vals = valid.to_numpy(zero_copy_only=False).astype(dt)
-        out_streams.append((cid, K_DATA, float_encode(vals)))
-    elif kind == TK_DECIMAL:
-        from ..stripes import _decimal_mantissas
-        t = valid.type
-        data, sec = decimal_encode(_decimal_mantissas(valid), t.scale)
-        out_streams.append((cid, K_DATA, data))
-        out_streams.append((cid, K_SECONDARY, sec))
-    elif kind == TK_TIMESTAMP:
-        us = valid.cast(pa.timestamp("us")).cast(pa.int64()) \
-            .to_numpy(zero_copy_only=False)
-        if writer_tz is not None:
-            from .orc_reader import _ORC_EPOCH_UTC, _writer_tz_base_seconds
-            base_shift = (_writer_tz_base_seconds(writer_tz)
-                          - _ORC_EPOCH_UTC) * 1_000_000
-            us = _utc_to_writer_frame_us(us, writer_tz) - np.int64(base_shift)
-        data, sec = timestamp_encode_us(us)
-        out_streams.append((cid, K_DATA, data))
-        out_streams.append((cid, K_SECONDARY, sec))
-    elif kind in (TK_STRING, TK_BINARY):
-        n = len(valid)
-        use_dict = False
-        if kind == TK_STRING and n > 64 and not no_dict:
-            step = max(n // 1024, 1)
-            sample = valid.take(np.arange(0, n, step))
-            use_dict = len(sample.unique()) <= max(len(sample) // 2, 1)
-        if use_dict:
-            enc = ENC_DICT_V2
-            dct = valid.dictionary_encode()
-            uniq = dct.dictionary.cast(pa.binary()).to_pylist()
-            order = np.argsort(np.array(uniq, dtype=object))
-            rank = np.empty_like(order)
-            rank[order] = np.arange(len(order))
-            indices = rank[dct.indices.to_numpy(zero_copy_only=False)
-                           .astype(np.int64)]
-            sorted_uniq = [uniq[i] for i in order]
-            dict_blob = b"".join(sorted_uniq)
-            dict_lengths = np.fromiter((len(u) for u in sorted_uniq),
-                                       dtype=np.int64, count=len(sorted_uniq))
-            out_streams.append((cid, K_DATA,
-                                rle_v2_encode(indices, signed=False,
-                                              interop=True)))
-            out_streams.append((cid, K_LENGTH,
-                                rle_v2_encode(dict_lengths, signed=False,
-                                              interop=True)))
-            out_streams.append((cid, K_DICT_DATA, dict_blob))
-            encodings[cid] = (enc, len(sorted_uniq))
-            return
-        blob, lengths = _binary_parts(valid)
-        out_streams.append((cid, K_DATA, blob))
-        out_streams.append((cid, K_LENGTH,
-                            rle_v2_encode(lengths, signed=False, interop=True)))
-    else:
-        raise TypeError(f"unsupported ORC kind {kind}")
-    encodings[cid] = (enc, 0)
 
 
 def _pos_extras(col_kind: int, stream_kind: int) -> int:
@@ -394,7 +311,21 @@ class OrcWriter:
     (each group's streams encoded independently and concatenated — a
     valid ORC encoding), so every position's in-run offsets are zero;
     dictionary encoding is disabled and PRESENT is always emitted so
-    the stream set is identical across groups."""
+    the stream set is identical across groups.
+
+    ``path`` may also be a writable binary file object, which `close`
+    leaves open.
+
+    Leaf columns take the reference writer's encodings
+    (`src/writer/stripe.rs:173-189`), so any ORC reader decodes the
+    file.  `stripes.py` subclasses the writer and overrides the
+    `_ints`/`_strings` hooks and `_interop` with codec auto-selection
+    and extension encodings."""
+
+    # RLEv2 flavour of the LENGTH / int DATA streams: interop, or the
+    # compact one only this engine reads (then list and map columns
+    # record ENC_RLEV2)
+    _interop = True
 
     def __init__(self, path: str, schema: pa.Schema, compression: int = 0,
                  block_size: int = 256 * 1024,
@@ -438,15 +369,141 @@ class OrcWriter:
                 self.bloom_cids[cid] = kind
         # tz name must resolve NOW (a bad name failing at read time, or
         # only in external readers, would corrupt every stripe silently)
+        self._wtz = None
         if writer_timezone not in ("UTC", "GMT"):
             from zoneinfo import ZoneInfo
             ZoneInfo(writer_timezone)
-        self._f = open(path, "wb")
+            self._wtz = writer_timezone
+        self._owns_file = isinstance(path, (str, os.PathLike))
+        self._f = open(path, "wb") if self._owns_file else path
         self._f.write(b"ORC")
         self._offset = 3
         self._stripes: list[tuple[int, int, int, int, int]] = []
         self._stripe_stats: list[dict[int, bytes]] = []
         self._n_rows = 0
+
+    def _rle(self, vals: np.ndarray, signed: bool = False) -> bytes:
+        return rle_v2_encode(vals, signed=signed, interop=self._interop)
+
+    def _ints(self, cid: int, vals: np.ndarray,
+              grouped: bool) -> tuple[int, bytes]:
+        """Integer DATA stream -> (column encoding, bytes)."""
+        return ENC_DIRECT_V2, self._rle(vals, signed=True)
+
+    def _strings(self, cid: int, valid: pa.Array, grouped: bool):
+        """String/binary streams -> (column encoding, dictionary size,
+        [(stream kind, bytes)]).  Row-index mode (`grouped`) keeps
+        every group on the one direct layout."""
+        if not grouped and self.types[cid][0] == TK_STRING \
+                and _dict_pays(valid):
+            return (ENC_DICT_V2, *_dictionary_streams(valid))
+        return ENC_DIRECT_V2, 0, _direct_streams(valid)
+
+    def _encode_tree(self, arr: pa.Array, cid: int, out_streams: list,
+                     encodings: dict, grouped: bool = False) -> None:
+        """Emit streams for column `cid` and recurse into children.
+
+        ORC stores child values only for rows where the parent is
+        present, so nested recursion filters by the parent's validity
+        first.  `grouped` is row-index mode: PRESENT is always emitted
+        and bit streams are deferred, so every group has the same
+        stream set and bit streams join into one."""
+        if isinstance(arr, pa.ChunkedArray):
+            arr = arr.combine_chunks()
+        kind, subs = self.types[cid][0], self.types[cid][1]
+
+        def recurse(child, sub):
+            self._encode_tree(child, sub, out_streams, encodings, grouped)
+
+        def bits(vals):
+            return ("__bits__", vals) if grouped else boolean_encode(vals)
+
+        enc, dict_size = ENC_DIRECT_V2, 0
+        if kind == TK_UNION:
+            # ORC unions carry no PRESENT here (arrow unions have no
+            # validity): a byte TAG stream + DENSE children (each child
+            # holds only the rows of its tag, `union.rs:36-163`)
+            if arr.type.mode != "sparse":
+                raise TypeError("only sparse unions are supported")
+            tags = np.asarray(arr.type_codes, dtype=np.int8)
+            out_streams.append((cid, K_DATA, byte_rle_encode(tags)))
+            # children stay `grouped`: row-index mode needs one stream
+            # set across groups even when a child's nulls appear in
+            # only some of them
+            for i, sub in enumerate(subs):
+                recurse(arr.field(i).filter(pa.array(tags == i)), sub)
+            encodings[cid] = (ENC_DIRECT, 0)
+            return
+        if arr.null_count or (grouped and cid != 0):
+            out_streams.append((cid, K_PRESENT,
+                                bits(np.asarray(arr.is_valid()))))
+            valid = arr.drop_null()
+        else:
+            valid = arr
+
+        if kind == TK_STRUCT:
+            enc = ENC_DIRECT
+            for i, sub in enumerate(subs):
+                recurse(valid.field(i) if cid != 0 else arr.field(i), sub)
+        elif kind in (TK_LIST, TK_MAP):
+            enc = ENC_DIRECT_V2 if self._interop else ENC_RLEV2
+            if kind == TK_MAP:
+                t = valid.type
+                valid = valid.cast(pa.list_(pa.struct([
+                    ("key", t.key_type), ("value", t.item_type)])))
+            lengths = valid.value_lengths().to_numpy(zero_copy_only=False)
+            out_streams.append((cid, K_LENGTH,
+                                self._rle(lengths.astype(np.int64))))
+            flat = valid.flatten()
+            if kind == TK_LIST:
+                recurse(flat, subs[0])
+            else:
+                recurse(flat.field(0), subs[0])
+                recurse(flat.field(1), subs[1])
+        elif kind == TK_BOOL:
+            enc = ENC_DIRECT
+            out_streams.append((cid, K_DATA, bits(
+                valid.to_numpy(zero_copy_only=False).astype(bool))))
+        elif kind == TK_BYTE:
+            enc = ENC_DIRECT
+            vals = valid.to_numpy(zero_copy_only=False).astype(np.int8)
+            out_streams.append((cid, K_DATA, byte_rle_encode(vals)))
+        elif kind in (TK_SHORT, TK_INT, TK_LONG, TK_DATE):
+            if kind == TK_DATE:
+                valid = valid.cast(pa.int32())
+            # native width: int32 token streams keep the RLEv2 32-bit
+            # fast path
+            enc, data = self._ints(cid, valid.to_numpy(zero_copy_only=False),
+                                   grouped)
+            out_streams.append((cid, K_DATA, data))
+        elif kind in (TK_FLOAT, TK_DOUBLE):
+            enc = ENC_DIRECT
+            dt = np.float32 if kind == TK_FLOAT else np.float64
+            vals = valid.to_numpy(zero_copy_only=False).astype(dt)
+            out_streams.append((cid, K_DATA, float_encode(vals)))
+        elif kind == TK_DECIMAL:
+            data, sec = decimal_encode(_decimal_mantissas(valid),
+                                       valid.type.scale)
+            out_streams.append((cid, K_DATA, data))
+            out_streams.append((cid, K_SECONDARY, sec))
+        elif kind == TK_TIMESTAMP:
+            us = valid.cast(pa.timestamp("us")).cast(pa.int64()) \
+                .to_numpy(zero_copy_only=False)
+            if self._wtz is not None:
+                from .orc_reader import _ORC_EPOCH_UTC, _writer_tz_base_seconds
+                base_shift = (_writer_tz_base_seconds(self._wtz)
+                              - _ORC_EPOCH_UTC) * 1_000_000
+                us = _utc_to_writer_frame_us(us, self._wtz) \
+                    - np.int64(base_shift)
+            data, sec = timestamp_encode_us(us)
+            out_streams.append((cid, K_DATA, data))
+            out_streams.append((cid, K_SECONDARY, sec))
+        elif kind in (TK_STRING, TK_BINARY):
+            enc, dict_size, streams = self._strings(cid, valid, grouped)
+            out_streams.extend((cid, k, b) for k, b in streams)
+        else:
+            raise TypeError(f"unsupported ORC kind {kind}")
+        encodings[cid] = (enc, dict_size)
 
     def _wrap(self, raw: bytes) -> bytes:
         if not self.compression:
@@ -473,8 +530,6 @@ class OrcWriter:
     def write_batch(self, batch: pa.RecordBatch) -> None:
         if batch.num_rows == 0:
             return
-        wtz = self.writer_timezone \
-            if self.writer_timezone not in ("UTC", "GMT") else None
         stride = self.row_index_stride
         index_bytes = b""
         index_streams: list[tuple[int, int, bytes]] = []  # (cid, kind, blob)
@@ -484,7 +539,7 @@ class OrcWriter:
             stats: dict[int, bytes] = {}
             for i, sub in enumerate(self.types[0][1]):
                 col = batch.column(i)
-                _encode_tree(col, sub, self.types, streams, encodings, wtz)
+                self._encode_tree(col, sub, streams, encodings)
                 stats[sub] = _column_statistics(col, self.types[sub][0])
             streams.sort(key=lambda s: (s[0], s[1]))
             wrapped = [(c, k, self._wrap(b)) for c, k, b in streams]
@@ -503,9 +558,7 @@ class OrcWriter:
                 st: dict[int, bytes] = {}
                 for i, sub in enumerate(self.types[0][1]):
                     col = g.column(i)
-                    _encode_tree(col, sub, self.types, sg, eg, wtz,
-                                 force_present=True, no_dict=True,
-                                 defer_bits=True)
+                    self._encode_tree(col, sub, sg, eg, grouped=True)
                     st[sub] = _column_statistics(col, self.types[sub][0])
                 sg.sort(key=lambda x: (x[0], x[1]))
                 per_group.append(sg)
@@ -605,20 +658,12 @@ class OrcWriter:
         self._stripe_stats.append(stats)
 
         foot = bytearray()
-        data = bytearray()
-        for cid, ikind, blob in index_streams:
-            entry = bytearray()
-            _pb_field_varint(entry, 1, ikind)
-            _pb_field_varint(entry, 2, cid)
-            _pb_field_varint(entry, 3, len(blob))
-            _pb_field_bytes(foot, 1, bytes(entry))
-        for cid, skind, s in wrapped:
+        for cid, skind, s in index_streams + wrapped:
             entry = bytearray()
             _pb_field_varint(entry, 1, skind)
             _pb_field_varint(entry, 2, cid)
             _pb_field_varint(entry, 3, len(s))
             _pb_field_bytes(foot, 1, bytes(entry))
-            data += s
         for cid in range(len(self.types)):
             e, dict_size = encodings.get(cid, (ENC_DIRECT, 0))
             enc = bytearray()
@@ -631,11 +676,13 @@ class OrcWriter:
         foot_w = self._wrap(bytes(foot))
 
         self._f.write(index_bytes)
-        self._f.write(data)
+        for _, _, s in wrapped:
+            self._f.write(s)
         self._f.write(foot_w)
-        self._stripes.append((self._offset, len(index_bytes), len(data),
+        data_len = sum(len(s) for _, _, s in wrapped)
+        self._stripes.append((self._offset, len(index_bytes), data_len,
                               len(foot_w), batch.num_rows))
-        self._offset += len(index_bytes) + len(data) + len(foot_w)
+        self._offset += len(index_bytes) + data_len + len(foot_w)
         self._n_rows += batch.num_rows
 
     def close(self) -> None:
@@ -696,7 +743,8 @@ class OrcWriter:
         _pb_field_bytes(ps, 8000, b"ORC")
         self._f.write(bytes(ps))
         self._f.write(bytes((len(ps),)))
-        self._f.close()
+        if self._owns_file:
+            self._f.close()
 
 
 def write_orc(path: str, table: pa.Table, compression: int = 0,

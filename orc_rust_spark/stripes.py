@@ -1,100 +1,62 @@
-"""Stripe encode/decode: an Arrow RecordBatch <-> one self-describing
-binary stripe blob with per-column streams.
+"""Native stripes: an Arrow RecordBatch <-> one self-contained stripe
+blob, the unit the Spark encode/decode passes move around.
 
-This is our engine's analog of the reference's stripe writer/reader
-(`src/writer/stripe.rs:65-171`, `src/stripe.rs:119-182`): each column is
-encoded independently into streams keyed (column, kind); values and
-validity are separated — a PRESENT stream (boolean bit-RLE,
-`src/encoding/boolean.rs:116-169`) is emitted only when the column has
-nulls, and data streams store only the non-null values which decode
-re-spaces (`src/encoding/mod.rs:64-91` decode_spaced).  Column-type ->
-codec defaults mirror `src/writer/stripe.rs:173-189` (ints -> RLEv2
-signed, int8 -> byte RLE, floats -> raw IEEE-754, strings -> direct +
-LENGTH, bool -> bit-RLE); beyond the reference we add dictionary, FoR,
-bit-pack and FSST with deterministic auto-selection (BASELINE.json
-north_star).
-
-Blob layout (little header, then concatenated streams):
-    magic  b"OSP1"
-    varint n_rows, varint n_cols
-    per column: varint len(name), name, u8 type_code, u8 has_present,
-                u8 codec, varint aux (dict size; else 0)
-    varint n_streams
-    per stream: varint col_idx, u8 stream_kind, varint byte_len
-    stream bytes...
+A native stripe is a one-stripe ORC file: `sources/orc_writer.py`
+writes it and `sources/orc_reader.py` decodes it straight from the
+buffer, so nested types, nulls, timestamps, decimals, projection,
+block compression and ROW_INDEX pruning all come from the one ORC
+column-tree codec.  What makes a stripe native is its leaf codecs: int
+and string columns take the smallest of several codecs, chosen per
+column per stripe by the auto-selection below and recorded in the
+column's ORC ColumnEncoding (the reference's per-column codec slot,
+`src/writer/mod.rs:60-93`).  Codecs beyond the reference's — FoR, int
+dictionary, bit-pack, FSST, and the compact RLEv2 flavour — use
+encoding ids outside ORC's 0-3 (`sources/orc_format.py`), so an
+external ORC reader rejects such a column instead of misreading it.
+RLEv2 (the reference's own choice) always stays a candidate, so each
+column is never larger than the reference would write it.
 """
 
 from __future__ import annotations
 
+import io
 from dataclasses import dataclass
 
 import numpy as np
 import pyarrow as pa
 
-from .kernels.boolean import boolean_decode, boolean_encode
-from .kernels.byte_rle import byte_rle_decode, byte_rle_encode
-from .kernels.float_codec import float_decode, float_encode
-from .kernels.for_codec import (
-    bitpack_decode,
-    bitpack_encode,
-    for_decode,
-    for_encode,
-    int_dict_decode,
-    int_dict_encode,
+from .kernels.for_codec import bitpack_encode, for_encode, int_dict_encode
+from .kernels.fsst import fsst_compress_with, fsst_train
+from .kernels.rle_v2 import rle_v2_encode
+from .kernels.util import bits_used_scalar, write_varint_zigzagged
+from .sources.orc_format import (
+    ENC_BITPACK,
+    ENC_DICT_RLEV2,
+    ENC_FOR,
+    ENC_FSST,
+    ENC_INT_DICT,
+    ENC_RLEV2,
+    K_DATA,
+    K_LENGTH,
+    TK_BOOL,
+    TK_BYTE,
+    TK_DECIMAL,
+    TK_DOUBLE,
+    TK_FLOAT,
+    TK_LIST,
+    TK_TIMESTAMP,
+    TK_UNION,
 )
-from .kernels.fsst import fsst_compress, fsst_decompress
-from .kernels.rle_v2 import rle_v2_decode, rle_v2_encode
-from .kernels.util import (
-    bits_used_scalar,
-    read_varint,
-    write_varint,
-    write_varint_zigzagged,
+from .sources.orc_reader import read_orc
+from .sources.orc_writer import (
+    OrcWriter,
+    _dict_pays,
+    _dictionary_streams,
+    _direct_streams,
 )
 
-MAGIC = b"OSP1"
-MAGIC_COMPRESSED = b"OSPC"  # + u8 kind + ORC chunked stream of an OSP1 blob
-
-
-def wrap_compressed(blob: bytes, kind: int) -> bytes:
-    """Optionally wrap a stripe blob in ORC chunked block compression
-    (kernels/compression.py; §2.2 of SURVEY).  kind 0 returns as-is —
-    the reference writer also emits CompressionKind::None
-    (`src/arrow_writer.rs:251`)."""
-    from .kernels.compression import K_NONE, compress_stream
-    if kind == K_NONE:
-        return blob
-    return MAGIC_COMPRESSED + bytes([kind]) + compress_stream(blob, kind)
-
-
-def unwrap_compressed(blob):
-    buf = memoryview(blob)
-    # pa.Buffer memoryviews are signed ('b'): byte reads >= 128 would
-    # come back negative in every varint/header parse downstream.
-    # Normalize ONCE here — slices of an unsigned view stay unsigned,
-    # and zero-copy callers (decode_pass hands the Arrow data buffer
-    # straight in) rely on it.
-    if buf.format != "B":
-        buf = buf.cast("B")
-    if bytes(buf[:4]) != MAGIC_COMPRESSED:
-        return buf
-    from .kernels.compression import decompress_stream
-    return decompress_stream(buf[5:], buf[4])
-
-# type codes
-T_INT8, T_INT16, T_INT32, T_INT64 = 1, 2, 3, 4
-T_FLOAT32, T_FLOAT64 = 5, 6
-T_STRING, T_BINARY = 7, 8
-T_BOOL = 9
-T_LIST_INT32 = 10
-T_DATE32 = 11
-T_TIMESTAMP_US = 12
-T_STRUCT = 13
-T_MAP = 14
-T_LIST_GEN = 15
-T_DECIMAL128 = 16  # aux = (precision << 8) | scale
-T_UNION = 17       # sparse union: TAG byte-RLE + full-length children
-
-# codec codes
+# codec ids: auto-selection candidates, and the names the encode
+# manifest records per column
 C_RAW = 0
 C_RLEV2 = 1
 C_BYTE_RLE = 3
@@ -106,7 +68,7 @@ C_FOR = 8
 C_BITPACK = 9
 C_INT_DICT = 10
 C_FSST = 11
-C_DECIMAL = 12      # varint mantissas + RLEv2 scales (decimal.rs layout)
+C_DECIMAL = 12
 C_TS2 = 13          # ORC two-stream timestamp (timestamp.rs layout)
 
 CODEC_NAMES = {
@@ -116,54 +78,19 @@ CODEC_NAMES = {
     C_DECIMAL: "decimal", C_TS2: "ts_two_stream",
 }
 
-# stream kinds (mirrors proto.rs:192-209 stream kinds we need)
-K_PRESENT, K_DATA, K_LENGTH, K_DICT_DATA, K_DICT_LENGTH, K_SECONDARY = 0, 1, 2, 3, 4, 5
-
-_PA_TYPE_CODES = {
-    pa.int8(): T_INT8,
-    pa.int16(): T_INT16,
-    pa.int32(): T_INT32,
-    pa.int64(): T_INT64,
-    pa.float32(): T_FLOAT32,
-    pa.float64(): T_FLOAT64,
-    pa.string(): T_STRING,
-    pa.large_string(): T_STRING,
-    pa.binary(): T_BINARY,
-    pa.bool_(): T_BOOL,
-    pa.date32(): T_DATE32,
-    pa.timestamp("us"): T_TIMESTAMP_US,
+# the ORC column encoding each selectable codec is written as
+_ENCODINGS = {
+    C_RLEV2: ENC_RLEV2, C_FOR: ENC_FOR, C_BITPACK: ENC_BITPACK,
+    C_INT_DICT: ENC_INT_DICT, C_STRING_DIRECT: ENC_RLEV2,
+    C_STRING_DICT: ENC_DICT_RLEV2, C_FSST: ENC_FSST,
 }
 
-_INT_TYPES = {T_INT16, T_INT32, T_INT64, T_DATE32, T_TIMESTAMP_US}
-
-
-def _type_code(t: pa.DataType) -> int:
-    if t in _PA_TYPE_CODES:
-        return _PA_TYPE_CODES[t]
-    if pa.types.is_map(t):
-        return T_MAP
-    if pa.types.is_list(t) and t.value_type in (pa.int32(), pa.int64()):
-        return T_LIST_INT32
-    if pa.types.is_list(t) or pa.types.is_large_list(t):
-        return T_LIST_GEN
-    if pa.types.is_struct(t):
-        return T_STRUCT
-    if pa.types.is_timestamp(t):
-        return T_TIMESTAMP_US
-    if pa.types.is_decimal(t):
-        return T_DECIMAL128
-    if pa.types.is_union(t):
-        return T_UNION
-    raise TypeError(f"unsupported column type: {t}")
-
-
-def _arrow_type(code: int) -> pa.DataType:
-    return {
-        T_INT8: pa.int8(), T_INT16: pa.int16(), T_INT32: pa.int32(), T_INT64: pa.int64(),
-        T_FLOAT32: pa.float32(), T_FLOAT64: pa.float64(), T_STRING: pa.string(),
-        T_BINARY: pa.binary(), T_BOOL: pa.bool_(), T_LIST_INT32: pa.list_(pa.int32()),
-        T_DATE32: pa.date32(), T_TIMESTAMP_US: pa.timestamp("us"),
-    }[code]
+# fixed codec of the column kinds without a choice
+_KIND_CODECS = {
+    TK_BOOL: C_BOOLEAN, TK_BYTE: C_BYTE_RLE, TK_FLOAT: C_FLOAT,
+    TK_DOUBLE: C_FLOAT, TK_DECIMAL: C_DECIMAL, TK_TIMESTAMP: C_TS2,
+    TK_UNION: C_BYTE_RLE,
+}
 
 
 # ---------------------------------------------------------------------------
@@ -220,75 +147,29 @@ def encode_int_auto(values: np.ndarray, candidates: tuple[int, ...] = (C_RLEV2, 
     return best_codec, best
 
 
-def _decode_int(codec: int, buf: bytes, n: int,
-                out_dtype=np.int64) -> np.ndarray:
-    """``out_dtype`` lets int32/int16 columns decode straight into their
-    narrow dtype (the values fit by construction — they were encoded
-    from that dtype), skipping a full-length astype pass."""
-    if codec == C_RLEV2:
-        return rle_v2_decode(buf, n, signed=True, out_dtype=out_dtype)
-    if codec == C_FOR:
-        vals = for_decode(buf)
-    elif codec == C_BITPACK:
-        vals = bitpack_decode(buf)
-    elif codec == C_INT_DICT:
-        vals = int_dict_decode(buf)
-    else:
-        raise ValueError(f"unknown int codec {codec}")
-    return vals if out_dtype == np.int64 else vals.astype(out_dtype)
-
-
 # ---------------------------------------------------------------------------
-# string codecs at the stripe level
+# string codec auto-selection
 # ---------------------------------------------------------------------------
 
-def _encode_string_auto(arr: pa.Array) -> tuple[int, int, dict[int, bytes]]:
-    """Returns (codec, aux, streams).  Candidates: direct, dictionary,
-    FSST-over-direct (kernels/fsst.py; north_star codec absent from the
-    reference).  FSST is tried only when a sampled compression estimate
-    predicts a win; the smallest actual encoding is chosen, ties broken
-    deterministically (direct < dict < fsst by candidate order)."""
-    # non-null values as offsets/data via Arrow buffers (vectorized).
-    # NOTE: sliced arrays carry an offset — index buffers()[1] from
-    # lb.offset and rebase the data slice, or every stripe after the
-    # first in a partition reads the wrong offsets (regression-tested).
-    comb = arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
-    valid = comb.drop_null()
-    lb = valid.cast(pa.large_binary())
-    n = len(valid)
-    if n == 0:
-        offsets = np.zeros(1, dtype=np.int64)
-        data_blob = b""
-    else:
-        raw_offsets = np.frombuffer(lb.buffers()[1], dtype=np.int64)
-        offsets = raw_offsets[lb.offset: lb.offset + n + 1]
-        dbuf = lb.buffers()[2]
-        data_blob = bytes(memoryview(dbuf)[offsets[0]: offsets[-1]]) \
-            if dbuf is not None else b""
-    lengths = np.diff(offsets)
-
-    length_stream = rle_v2_encode(lengths, signed=False)
-    direct_size = len(data_blob) + len(length_stream)
-
-    # dictionary attempt: sample cardinality first
-    codec, aux = C_STRING_DIRECT, 0
-    streams = {K_DATA: data_blob, K_LENGTH: length_stream}
-    if n > 64:
-        step = max(n // 1024, 1)
-        sample = valid.take(np.arange(0, n, step))
-        card = len(sample.unique())
-        if card <= max(len(sample) // 2, 1):
-            uniq_arr, indices = _factorize_binary(valid)
-            dict_blob = b"".join(uniq_arr)
-            dict_lengths = np.fromiter((len(u) for u in uniq_arr), dtype=np.int64,
-                                       count=len(uniq_arr))
-            idx_stream = rle_v2_encode(indices, signed=False)
-            dl_stream = rle_v2_encode(dict_lengths, signed=False)
-            dict_size = len(dict_blob) + len(idx_stream) + len(dl_stream)
-            if dict_size < direct_size:
-                codec, aux = C_STRING_DICT, len(uniq_arr)
-                streams = {K_DATA: idx_stream, K_DICT_LENGTH: dl_stream,
-                           K_DICT_DATA: dict_blob}
+def _encode_string_auto(valid: pa.Array, direct_only: bool = False):
+    """-> (codec, dictionary size, [(ORC stream kind, bytes)]) for the
+    non-null values of a string/binary column.  Candidates: direct,
+    dictionary, FSST-over-direct (kernels/fsst.py; north_star codec
+    absent from the reference).  FSST is tried only when a sampled
+    compression estimate predicts a win; the smallest actual encoding
+    is chosen, ties broken deterministically (direct < dict < fsst by
+    candidate order).  `direct_only` pins the direct layout."""
+    direct = _direct_streams(valid, interop=False)
+    (_, blob), (_, length_stream) = direct
+    best = (C_STRING_DIRECT, 0, direct)
+    if direct_only:
+        return best
+    direct_size = size = len(blob) + len(length_stream)
+    if _dict_pays(valid):
+        n_dict, streams = _dictionary_streams(valid, interop=False)
+        dict_size = sum(len(s) for _, s in streams)
+        if dict_size < size:
+            best, size = (C_STRING_DICT, n_dict, streams), dict_size
     # FSST attempt, sample-gated (blob must be big enough to amortize
     # the symbol table and the estimate must predict a real win).  The
     # table trains ONCE on the leading 16 KiB — `fsst_compress(probe)`
@@ -301,38 +182,22 @@ def _encode_string_auto(arr: pa.Array) -> tuple[int, int, dict[int, bytes]]:
     # cannot beat such a dictionary, and training it was a pure
     # per-stripe fixed cost on low-cardinality columns.  RLEv2/dict
     # stay in the race, so chosen size remains <= the reference's.
-    dict_crushed = codec == C_STRING_DICT and \
-        sum(len(s) for s in streams.values()) * 8 <= direct_size
-    if len(data_blob) >= 2048 and not dict_crushed:
-        from .kernels.fsst import fsst_compress_with, fsst_train
-        data_np = np.frombuffer(data_blob, dtype=np.uint8)
+    dict_crushed = best[0] == C_STRING_DICT and size * 8 <= direct_size
+    if len(blob) >= 2048 and not dict_crushed:
+        data_np = np.frombuffer(blob, dtype=np.uint8)
         table = fsst_train(data_np)
         probe_n = 1 << 14
         est = fsst_compress_with(data_np[:probe_n], table)
-        if len(est) * 10 < min(len(data_blob), probe_n) * 8:  # ratio > 1.25
-            full = est if len(data_blob) <= probe_n \
+        if len(est) * 10 < min(len(blob), probe_n) * 8:  # ratio > 1.25
+            full = est if len(blob) <= probe_n \
                 else fsst_compress_with(data_np, table)
-            best = sum(len(s) for s in streams.values())  # current winner
-            if len(full) + len(length_stream) < best:
-                codec, aux = C_FSST, 0
-                streams = {K_DATA: full, K_LENGTH: length_stream}
-    return codec, aux, streams
-
-
-def _factorize_binary(valid: pa.Array) -> tuple[list[bytes], np.ndarray]:
-    """Sorted-unique + inverse indices over a binary/string Arrow array."""
-    dct = valid.dictionary_encode()
-    dictionary = dct.dictionary.cast(pa.binary()).to_pylist()
-    indices = dct.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-    order = np.argsort(np.array(dictionary, dtype=object))
-    rank = np.empty_like(order)
-    rank[order] = np.arange(len(order))
-    sorted_dict = [dictionary[i] for i in order]
-    return sorted_dict, rank[indices]
+            if len(full) + len(length_stream) < size:
+                best = (C_FSST, 0, [(K_DATA, full), (K_LENGTH, length_stream)])
+    return best
 
 
 # ---------------------------------------------------------------------------
-# stripe encode
+# stripe encode / decode
 # ---------------------------------------------------------------------------
 
 @dataclass
@@ -351,705 +216,76 @@ class ColumnPlan:
         return (C_RLEV2, self.codec)
 
 
-def _combine(arr):
-    return arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
+class _NativeWriter(OrcWriter):
+    """OrcWriter whose int and string leaves take the smallest codec,
+    extension encodings allowed.  A top-level column's plan steers its
+    ints, or a list column's elements.  Row-index mode pins every
+    group to RLEv2 / direct strings, since one column encoding must
+    cover all groups."""
+    _interop = False
 
+    def __init__(self, sink, schema: pa.Schema,
+                 plans: dict[str, ColumnPlan] | None = None, **kw):
+        super().__init__(sink, schema, **kw)
+        plans = plans or {}
+        self.plans = {self._leaf(cid): plans[f.name]
+                      for f, cid in zip(schema, self.types[0][1])
+                      if f.name in plans}
+        self.codecs: dict[int, int] = {}  # cid -> chosen codec
 
-def _decimal_mantissas(arr: pa.Array):
-    """Mantissas of a decimal128 array (no nulls): an int64 ndarray
-    when every value's high word is the low word's sign extension
-    (precision <= 18 always is — validated, not assumed), else a list
-    of exact python ints reassembled from the 16-byte little-endian
-    pairs (the varint encoder is unbounded, so precision > 18 columns
-    cost a per-value loop but lose nothing)."""
-    n = len(arr)
-    if n == 0:
-        return np.empty(0, dtype=np.int64)
-    pairs = np.frombuffer(arr.buffers()[1], dtype=np.int64)
-    lo = pairs[2 * arr.offset: 2 * (arr.offset + n): 2]
-    hi = pairs[2 * arr.offset + 1: 2 * (arr.offset + n) + 1: 2]
-    if not np.array_equal(hi, lo >> np.int64(63)):
-        lo_u = lo.view(np.uint64)
-        return [(int(h) << 64) | int(lu)
-                for h, lu in zip(hi.tolist(), lo_u.tolist())]
-    return lo.copy()
+    def _leaf(self, cid: int) -> int:
+        """A list column's element, else the column itself."""
+        return self.types[cid][1][0] if self.types[cid][0] == TK_LIST \
+            else cid
 
-
-def _encode_column(name, arr, plan, metas, streams_out) -> None:
-    """Recursive column encoder: appends (meta, streams) entries
-    depth-first — nested types (struct/map/list) mirror the reference's
-    column-tree decomposition (`src/schema.rs:240-320`, §2.5): parent
-    PRESENT + child columns, LENGTH streams for list-likes."""
-    arr = _combine(arr)
-    tcode = _type_code(arr.type)
-    has_present = 1 if arr.null_count > 0 else 0
-    streams: dict[int, bytes] = {}
-    if has_present:
-        validity = np.asarray(arr.is_valid())
-        streams[K_PRESENT] = boolean_encode(validity)
-        valid_arr = _combine(arr.drop_null())
-    else:
-        valid_arr = arr
-    aux = 0
-    codec = C_RAW
-
-    if tcode == T_TIMESTAMP_US and plan.codec == C_TS2:
-        # ORC two-stream layout (seconds-from-2015 + nano trick),
-        # `src/encoding/timestamp.rs:30-197`; exact for µs instants
-        from .kernels.timestamp_decimal import timestamp_encode_us
-        us = valid_arr.cast(pa.int64()).to_numpy(zero_copy_only=False)
-        data, sec = timestamp_encode_us(us)
-        codec = C_TS2
-        streams[K_DATA] = data
-        streams[K_SECONDARY] = sec
-        metas.append((name, tcode, has_present, codec, aux))
-        streams_out.append(streams)
-        return
-
-    if tcode == T_DECIMAL128:
-        from .kernels.timestamp_decimal import decimal_encode
-        t = valid_arr.type
-        aux = (t.precision << 8) | t.scale
-        data, sec = decimal_encode(_decimal_mantissas(valid_arr), t.scale)
-        codec = C_DECIMAL
-        streams[K_DATA] = data
-        streams[K_SECONDARY] = sec
-        metas.append((name, tcode, has_present, codec, aux))
-        streams_out.append(streams)
-        return
-
-    if tcode in _INT_TYPES:
-        if tcode == T_TIMESTAMP_US:
-            vals = valid_arr.cast(pa.int64()).to_numpy(zero_copy_only=False)
-        elif tcode == T_DATE32:
-            vals = valid_arr.cast(pa.int32()).to_numpy(zero_copy_only=False).astype(np.int64)
-        else:
-            vals = valid_arr.to_numpy(zero_copy_only=False)
-        cand = plan.candidates()
+    def _ints(self, cid, vals, grouped):
+        plan = self.plans.get(cid)
+        cand = (C_RLEV2,) if grouped else plan.candidates() if plan else None
         codec, data = encode_int_auto(vals) if cand is None \
             else encode_int_auto(vals, cand)
-        streams[K_DATA] = data
-    elif tcode == T_INT8:
-        vals = valid_arr.to_numpy(zero_copy_only=False).astype(np.int8)
-        codec = C_BYTE_RLE
-        streams[K_DATA] = byte_rle_encode(vals)
-    elif tcode in (T_FLOAT32, T_FLOAT64):
-        dt = np.float32 if tcode == T_FLOAT32 else np.float64
-        vals = valid_arr.to_numpy(zero_copy_only=False).astype(dt)
-        codec = C_FLOAT
-        streams[K_DATA] = float_encode(vals)
-    elif tcode == T_BOOL:
-        vals = valid_arr.to_numpy(zero_copy_only=False).astype(bool)
-        codec = C_BOOLEAN
-        streams[K_DATA] = boolean_encode(vals)
-    elif tcode in (T_STRING, T_BINARY):
-        codec, aux, sstreams = _encode_string_auto(valid_arr)
-        streams.update(sstreams)
-    elif tcode == T_LIST_INT32:
-        lv = valid_arr.cast(pa.list_(pa.int32()))
-        flat = lv.flatten()
-        row_lengths = lv.value_lengths().to_numpy(zero_copy_only=False).astype(np.int64)
-        streams[K_LENGTH] = rle_v2_encode(row_lengths, signed=False)
-        child = flat.to_numpy(zero_copy_only=False)
-        cand = plan.candidates()
-        codec, data = encode_int_auto(child) if cand is None \
-            else encode_int_auto(child, cand)
-        streams[K_DATA] = data
-    elif tcode == T_STRUCT:
-        aux = valid_arr.type.num_fields
-        metas.append((name, tcode, has_present, codec, aux))
-        streams_out.append(streams)
-        for i in range(aux):
-            f = valid_arr.type.field(i)
-            _encode_column(f.name, valid_arr.field(i), ColumnPlan(),
-                           metas, streams_out)
-        return
-    elif tcode == T_UNION:
-        # sparse union (`src/array_decoder/union.rs:36-163`): a byte-RLE
-        # TAG stream selects among full-length children; arrow unions
-        # carry no validity of their own, matching the reference's
-        # "rely on child arrays" semantics.  Spark has no union type
-        # (SURVEY §1.2) — this is a stripe-format capability for parity,
-        # exercised by direct kernel tests.
-        if valid_arr.type.mode != "sparse":
-            raise TypeError("only sparse unions are supported")
-        aux = valid_arr.type.num_fields
-        tags = np.frombuffer(valid_arr.buffers()[1], dtype=np.int8)[
-            valid_arr.offset: valid_arr.offset + len(valid_arr)]
-        if not set(tags.tolist()) <= set(range(aux)):
-            raise ValueError("union type codes must be 0..n_children-1")
-        streams[K_DATA] = byte_rle_encode(tags)
-        metas.append((name, tcode, has_present, C_BYTE_RLE, aux))
-        streams_out.append(streams)
-        for i in range(aux):
-            f = valid_arr.type.field(i)
-            _encode_column(f.name, valid_arr.field(i), ColumnPlan(),
-                           metas, streams_out)
-        return
-    elif tcode in (T_MAP, T_LIST_GEN):
-        if tcode == T_MAP:
-            t = valid_arr.type
-            lv = valid_arr.cast(pa.list_(pa.struct([
-                ("key", t.key_type), ("value", t.item_type)])))
-        else:
-            lv = valid_arr
-        row_lengths = lv.value_lengths().to_numpy(zero_copy_only=False).astype(np.int64)
-        streams[K_LENGTH] = rle_v2_encode(row_lengths, signed=False)
-        aux = 1
-        metas.append((name, tcode, has_present, codec, aux))
-        streams_out.append(streams)
-        _encode_column("item", lv.flatten(), ColumnPlan(), metas, streams_out)
-        return
-    else:
-        raise TypeError(f"unsupported type code {tcode}")
+        self.codecs[cid] = codec
+        return _ENCODINGS[codec], data
 
-    metas.append((name, tcode, has_present, codec, aux))
-    streams_out.append(streams)
+    def _strings(self, cid, valid, grouped):
+        codec, dict_size, streams = _encode_string_auto(valid, grouped)
+        self.codecs[cid] = codec
+        return _ENCODINGS[codec], dict_size, streams
+
+    def manifest_codecs(self) -> dict[str, str]:
+        """{column: codec name} of the last stripe written; a list
+        column reports its elements' codec."""
+        out = {}
+        for f, cid in zip(self.schema, self.types[0][1]):
+            leaf = self._leaf(cid)
+            codec = self.codecs.get(
+                leaf, _KIND_CODECS.get(self.types[leaf][0], C_RAW))
+            out[f.name] = CODEC_NAMES[codec]
+        return out
 
 
-def encode_stripe(batch: pa.RecordBatch, plans: dict[str, ColumnPlan] | None = None) -> bytes:
-    plans = plans or {}
-    n_rows = batch.num_rows
-    header = bytearray()
-    stream_dir = bytearray()
-    payload = bytearray()
-    col_metas: list[tuple] = []
-    col_streams: list[dict[int, bytes]] = []
-
-    for ci, field in enumerate(batch.schema):
-        _encode_column(field.name, batch.column(ci),
-                       plans.get(field.name, ColumnPlan()),
-                       col_metas, col_streams)
-
-    all_streams: list[tuple[int, int, bytes]] = []
-    for ci, streams in enumerate(col_streams):
-        for kind, blob in sorted(streams.items()):
-            all_streams.append((ci, kind, blob))
-
-    header += MAGIC
-    write_varint(header, n_rows)
-    write_varint(header, len(col_metas))
-    for name, tcode, has_present, codec, aux in col_metas:
-        nb = name.encode()
-        write_varint(header, len(nb))
-        header += nb
-        header.append(tcode)
-        header.append(has_present)
-        header.append(codec)
-        write_varint(header, aux)
-    write_varint(stream_dir, len(all_streams))
-    for ci, kind, blob in all_streams:
-        write_varint(stream_dir, ci)
-        stream_dir.append(kind)
-        write_varint(stream_dir, len(blob))
-        payload += blob
-    return bytes(header + stream_dir + payload)
-
-
-# ---------------------------------------------------------------------------
-# stripe decode
-# ---------------------------------------------------------------------------
-
-def _subtree_size(metas, mi: int) -> int:
-    _, tcode, _, _, aux = metas[mi]
-    size = 1
-    if tcode in (T_STRUCT, T_UNION):
-        for _ in range(aux):
-            size += _subtree_size(metas, mi + size)
-    elif tcode in (T_MAP, T_LIST_GEN):
-        size += _subtree_size(metas, mi + size)
-    return size
-
-
-def _expand_with_nulls(arr: pa.Array, validity, n_rows: int) -> pa.Array:
-    """Spread n_valid values over n_rows via take-with-null-indices
-    (the nested-type analog of decode_spaced)."""
-    if validity is None:
-        return arr
-    idx = np.full(n_rows, -1, dtype=np.int64)
-    idx[validity] = np.arange(len(arr), dtype=np.int64)
-    return arr.take(pa.array(idx, pa.int64(), mask=~validity))
-
-
-def _list_offsets(row_lengths: np.ndarray, validity, n_rows: int,
-                  n_valid: int) -> tuple[pa.Array, pa.Array | None]:
-    offsets_valid = np.zeros(n_valid + 1, dtype=np.int64)
-    np.cumsum(row_lengths, out=offsets_valid[1:])
-    if validity is None:
-        return pa.array(offsets_valid.astype(np.int32), pa.int32()), None
-    offsets = np.zeros(n_rows + 1, dtype=np.int64)
-    idx = np.cumsum(validity)
-    offsets[1:] = offsets_valid[idx]
-    return (pa.array(offsets.astype(np.int32), pa.int32()),
-            pa.array(~validity))
-
-
-def _decode_tree(metas, mi: int, stream_for, n: int) -> tuple[pa.Array, int]:
-    """Recursive column decoder: consumes metas depth-first, producing
-    an Arrow array of exactly n rows."""
-    name, tcode, has_present, codec, aux = metas[mi]
-
-    def stream(kind: int):
-        return stream_for(mi, kind)
-
-    if has_present:
-        validity = boolean_decode(stream(K_PRESENT), n)
-        n_valid = int(validity.sum())
-    else:
-        validity = None
-        n_valid = n
-
-    if tcode == T_STRUCT:
-        children = []
-        names = []
-        mj = mi + 1
-        for _ in range(aux):
-            names.append(metas[mj][0])
-            child, mj = _decode_tree(metas, mj, stream_for, n_valid)
-            children.append(child)
-        st = pa.StructArray.from_arrays(children, names)
-        return _expand_with_nulls(st, validity, n), mj
-
-    if tcode == T_UNION:
-        tags = byte_rle_decode(stream(K_DATA), n).view(np.int8)
-        children = []
-        names = []
-        mj = mi + 1
-        for _ in range(aux):
-            names.append(metas[mj][0])
-            child, mj = _decode_tree(metas, mj, stream_for, n)
-            children.append(child)
-        arr = pa.UnionArray.from_sparse(pa.array(tags, pa.int8()), children,
-                                        field_names=names)
-        return arr, mj
-
-    if tcode in (T_MAP, T_LIST_GEN):
-        row_lengths = rle_v2_decode(stream(K_LENGTH), n_valid, signed=False)
-        total = int(row_lengths.sum())
-        child, mj = _decode_tree(metas, mi + 1, stream_for, total)
-        offsets, mask = _list_offsets(row_lengths, validity, n, n_valid)
-        if tcode == T_MAP:
-            entries = child
-            lst = pa.ListArray.from_arrays(offsets, entries, mask=mask)
-            # rebuild as a MapArray from the list-of-struct layout
-            arr = pa.MapArray.from_arrays(
-                lst.offsets, lst.values.field(0), lst.values.field(1))
-            if mask is not None:
-                # MapArray.from_arrays lacks a mask param: null via take
-                idx = np.arange(n, dtype=np.int64)
-                arr = arr.take(pa.array(idx, pa.int64(),
-                                        mask=np.asarray(mask)))
-            return arr, mj
-        return pa.ListArray.from_arrays(offsets, child, mask=mask), mj
-
-    if tcode == T_LIST_INT32:
-        row_lengths = rle_v2_decode(stream(K_LENGTH), n_valid, signed=False)
-        total = int(row_lengths.sum())
-        child = _decode_int(codec, stream(K_DATA), total,
-                            out_dtype=np.int32)
-        offsets, mask = _list_offsets(row_lengths, validity, n, n_valid)
-        return pa.ListArray.from_arrays(
-            offsets, pa.array(child, pa.int32()), mask=mask), mi + 1
-
-    if tcode == T_DECIMAL128:
-        from .kernels.timestamp_decimal import decimal_decode
-        prec, scl = aux >> 8, aux & 0xFF
-        mlist = decimal_decode(stream(K_DATA), stream(K_SECONDARY),
-                               n_valid, scl)
-        try:
-            mant = np.array(mlist, dtype=np.int64)
-            storage = np.empty((n_valid, 2), dtype=np.int64)
-            storage[:, 0] = mant
-            storage[:, 1] = mant >> np.int64(63)
-            raw16 = storage.tobytes()
-        except OverflowError:
-            # precision > 18: exact 16-byte little-endian int128s
-            raw16 = b"".join(int(m).to_bytes(16, "little", signed=True)
-                             for m in mlist)
-        arr = pa.Array.from_buffers(
-            pa.decimal128(prec, scl), n_valid,
-            [None, pa.py_buffer(raw16)])
-        return _expand_with_nulls(arr, validity, n), mi + 1
-
-    atype = _arrow_type(tcode)
-    if tcode == T_TIMESTAMP_US and codec == C_TS2:
-        from .kernels.timestamp_decimal import timestamp_decode_us
-        us = timestamp_decode_us(stream(K_DATA), stream(K_SECONDARY), n_valid)
-        arr = _respace_primitive(us, validity, n, atype)
-    elif tcode in _INT_TYPES:
-        nd = np.int32 if tcode in (T_INT32, T_DATE32) else \
-            np.int16 if tcode == T_INT16 else np.int64
-        vals = _decode_int(codec, stream(K_DATA), n_valid, out_dtype=nd)
-        arr = _respace_primitive(vals, validity, n, atype)
-    elif tcode == T_INT8:
-        vals = byte_rle_decode(stream(K_DATA), n_valid).view(np.int8)
-        arr = _respace_primitive(vals.astype(np.int64), validity, n, atype)
-    elif tcode in (T_FLOAT32, T_FLOAT64):
-        dt = np.float32 if tcode == T_FLOAT32 else np.float64
-        vals = float_decode(stream(K_DATA), n_valid, dt)
-        arr = _respace_float(vals, validity, n, atype)
-    elif tcode == T_BOOL:
-        vals = boolean_decode(stream(K_DATA), n_valid)
-        arr = _respace_primitive(vals.astype(np.int64), validity, n, atype)
-    elif tcode in (T_STRING, T_BINARY):
-        arr = _decode_string(codec, aux, stream, n_valid, validity, n, atype)
-    else:
-        raise TypeError(f"unsupported type code {tcode}")
-    return arr, mi + 1
+def encode_stripe(batch: pa.RecordBatch, plans: dict[str, ColumnPlan] | None = None,
+                  *, _compression: int = 0, _codecs: dict | None = None) -> bytes:
+    """Encode a batch as a native stripe (a one-stripe ORC file).
+    `_compression` is the encode pass's block compression (an ORC
+    CompressionKind, applied per stream); `_codecs`, when given,
+    receives the manifest's {column: codec name}."""
+    sink = io.BytesIO()
+    w = _NativeWriter(sink, batch.schema, plans, compression=_compression)
+    w.write_batch(batch)
+    w.close()
+    if _codecs is not None:
+        _codecs.update(w.manifest_codecs())
+    return sink.getvalue()
 
 
 def decode_stripe(blob, columns: list[str] | None = None) -> pa.RecordBatch:
-    """Decode a stripe; `columns` projects (unprojected streams are never
-    touched — the analog of `src/projection.rs` + `src/stripe.rs:159`)."""
-    blob = unwrap_compressed(blob)
-    buf = memoryview(blob)
-    if bytes(buf[:4]) != MAGIC:
-        raise ValueError("bad stripe magic")
-    pos = 4
-    n_rows, pos = read_varint(buf, pos)
-    n_cols, pos = read_varint(buf, pos)
-    metas = []
-    for _ in range(n_cols):
-        ln, pos = read_varint(buf, pos)
-        name = bytes(buf[pos : pos + ln]).decode()
-        pos += ln
-        tcode = buf[pos]
-        has_present = buf[pos + 1]
-        codec = buf[pos + 2]
-        pos += 3
-        aux, pos = read_varint(buf, pos)
-        metas.append((name, tcode, has_present, codec, aux))
-    n_streams, pos = read_varint(buf, pos)
-    dir_entries = []
-    for _ in range(n_streams):
-        ci, pos = read_varint(buf, pos)
-        kind = buf[pos]
-        pos += 1
-        ln, pos = read_varint(buf, pos)
-        dir_entries.append((ci, kind, ln))
-    offset = pos
-    stream_loc: dict[tuple[int, int], tuple[int, int]] = {}
-    for ci, kind, ln in dir_entries:
-        stream_loc[(ci, kind)] = (offset, ln)
-        offset += ln
-    # corrupt-input guard (`tests/integration/data/corrupt` analog): a
-    # truncated blob or an overlong directory length must fail cleanly
-    # here, not decode garbage from a short buffer downstream
-    if offset > len(buf):
-        raise ValueError(
-            f"truncated stripe: directory claims {offset} bytes, "
-            f"blob has {len(buf)}")
-
-    def stream_for(ci: int, kind: int):
-        off, ln = stream_loc[(ci, kind)]
-        return buf[off : off + ln]
-
-    want = set(columns) if columns is not None else None
-    out_arrays = []
-    out_fields = []
-    mi = 0
-    while mi < len(metas):
-        name = metas[mi][0]
-        if want is not None and name not in want:
-            mi += _subtree_size(metas, mi)
-            continue
-        arr, mi = _decode_tree(metas, mi, stream_for, n_rows)
-        out_arrays.append(arr)
-        out_fields.append(pa.field(name, arr.type))
-    return pa.RecordBatch.from_arrays(out_arrays, schema=pa.schema(out_fields))
-
-
-def stripe_num_rows(blob) -> int:
-    buf = memoryview(blob)
-    if bytes(buf[:4]) == MAGIC_ROWGROUP:
-        meta, _ = _rowgroup_meta(buf)
-        return sum(g["n_rows"] for g in meta)
-    n_rows, _ = read_varint(buf, 4)
-    return n_rows
-
-
-# ---------------------------------------------------------------------------
-# row-grouped stripes: sub-stripe statistics + selective decode
-# (`src/row_index.rs:18-60`, `src/row_group_filter.rs:51-118` analog —
-# the reference keeps per-row-group positions + min/max and skips
-# non-matching groups; here each row group is its own encoded section,
-# so a skipped group's bytes are never touched, not just not returned)
-# ---------------------------------------------------------------------------
-
-MAGIC_ROWGROUP = b"OSPR"
-DEFAULT_ROW_GROUP_ROWS = 10_000  # the reference's index stride
-
-
-def _stat_bytes(v) -> bytes:
-    """Order-preserving byte encoding, so group pruning can compare
-    min/max of any stat column as plain bytes: ints sign-biased
-    big-endian, floats via the IEEE total-order trick, strings raw
-    UTF-8.  A wrong order here would prune a matching group — silent
-    data loss — so numbers must NOT go through decimal strings."""
-    if isinstance(v, bytes):
-        return v
-    if isinstance(v, str):
-        return v.encode()
-    if isinstance(v, bool):
-        v = int(v)
-    if isinstance(v, int):
-        return (v + (1 << 63)).to_bytes(8, "big")
-    if isinstance(v, float):
-        import struct
-        b = struct.unpack(">Q", struct.pack(">d", v))[0]
-        b = (b ^ (1 << 63)) if not (b >> 63) else (~b & 0xFFFFFFFFFFFFFFFF)
-        return b.to_bytes(8, "big")
-    raise TypeError(f"unsupported stat value type {type(v)}")
-
-
-def encode_stripe_rowgroups(batch: pa.RecordBatch,
-                            plans: dict[str, ColumnPlan] | None = None,
-                            group_rows: int = DEFAULT_ROW_GROUP_ROWS,
-                            stat_columns: list[str] | None = None) -> bytes:
-    """Encode with a row-group index: the batch splits into ~group_rows
-    sections, each an independent OSP1 stripe, with per-group per-column
-    min/max in the container header.
-
-    Layout:
-        magic  b"OSPR"
-        varint n_groups, varint n_stat_cols
-        per stat col: varint len(name), name
-        per group: varint n_rows, varint blob_len,
-                   per stat col: varint len(min), min, varint len(max), max
-        group blobs...
-    """
-    names = [f.name for f in batch.schema]
-    if stat_columns is None:
-        stat_columns = [n for n, f in zip(names, batch.schema)
-                        if pa.types.is_integer(f.type) or
-                        pa.types.is_string(f.type) or
-                        pa.types.is_floating(f.type)]
-    header = bytearray()
-    write_varint(header, len(stat_columns))
-    for c in stat_columns:
-        cb = c.encode()
-        write_varint(header, len(cb))
-        header += cb
-        # 1-byte type tag so the decode side can coerce predicate bounds
-        # into the SAME order-preserving byte encoding the stats used —
-        # an int bound against a float column compared sign-biased-int
-        # bytes to IEEE-total-order bytes and silently dropped rows
-        ft = batch.schema.field(c).type
-        if pa.types.is_integer(ft) or pa.types.is_boolean(ft):
-            header.append(ord("i"))
-        elif pa.types.is_floating(ft):
-            header.append(ord("f"))
-        elif pa.types.is_string(ft) or pa.types.is_large_string(ft):
-            header.append(ord("s"))
-        else:
-            raise TypeError(f"stat column {c!r} has unsupported type {ft}")
-    groups = bytearray()
-    blobs: list[bytes] = []
-    n_groups = 0
-    for off in range(0, batch.num_rows, group_rows) or [0]:
-        g = batch.slice(off, group_rows)
-        blob = encode_stripe(g, plans)
-        entry = bytearray()
-        write_varint(entry, g.num_rows)
-        write_varint(entry, len(blob))
-        for c in stat_columns:
-            col = g.column(names.index(c))
-            mn = pa.compute.min(col).as_py()
-            mx = pa.compute.max(col).as_py()
-            for v in (mn, mx):
-                vb = _stat_bytes(v) if v is not None else b""
-                write_varint(entry, len(vb))
-                entry += vb
-        groups += entry
-        blobs.append(blob)
-        n_groups += 1
-    out = bytearray(MAGIC_ROWGROUP)
-    write_varint(out, n_groups)
-    out += header
-    out += groups
-    for b in blobs:
-        out += b
-    return bytes(out)
-
-
-def _rowgroup_meta(buf) -> list[dict]:
-    pos = 4
-    n_groups, pos = read_varint(buf, pos)
-    n_stat, pos = read_varint(buf, pos)
-    stat_cols = []
-    stat_types: dict[str, str] = {}
-    for _ in range(n_stat):
-        ln, pos = read_varint(buf, pos)
-        name = bytes(buf[pos: pos + ln]).decode()
-        pos += ln
-        stat_cols.append(name)
-        stat_types[name] = chr(buf[pos])
-        pos += 1
-    metas = []
-    for _ in range(n_groups):
-        n_rows, pos = read_varint(buf, pos)
-        blob_len, pos = read_varint(buf, pos)
-        stats = {}
-        for c in stat_cols:
-            ln, pos = read_varint(buf, pos)
-            mn = bytes(buf[pos: pos + ln])
-            pos += ln
-            ln, pos = read_varint(buf, pos)
-            mx = bytes(buf[pos: pos + ln])
-            pos += ln
-            stats[c] = (mn, mx)
-        metas.append({"n_rows": n_rows, "blob_len": blob_len, "stats": stats})
-    off = pos
-    for m in metas:
-        m["offset"] = off
-        off += m["blob_len"]
-    return metas, stat_types
-
-
-def _coerce_bound(v, tag: str, is_lo: bool):
-    """Coerce a predicate bound to the stat column's type so its
-    `_stat_bytes` encoding is comparable with the stored min/max.
-    Integer columns accept float bounds via the exact conservative
-    rounding (mx < lo  <=>  mx < ceil(lo) for integer mx); anything
-    else mismatched raises instead of silently mis-pruning."""
-    if tag == "s":
-        if isinstance(v, str):
-            return v
-        if isinstance(v, bytes):
-            return v
-        raise TypeError(f"string stat column needs str bound, got {type(v)}")
-    if tag == "f":
-        if isinstance(v, bool) or not isinstance(v, (int, float)):
-            raise TypeError(f"float stat column needs numeric bound, got {type(v)}")
-        return float(v)
-    if tag == "i":
-        if isinstance(v, bool):
-            return int(v)
-        if isinstance(v, (int, np.integer)):
-            return int(v)
-        if isinstance(v, float):
-            import math
-            return math.ceil(v) if is_lo else math.floor(v)
-        raise TypeError(f"int stat column needs numeric bound, got {type(v)}")
-    raise TypeError(f"unknown stat type tag {tag!r}")
-
-
-def decode_stripe_rowgroups(blob, columns: list[str] | None = None,
-                            predicate: dict[str, tuple] | None = None,
-                            _stats=None) -> pa.RecordBatch:
-    """Decode a row-grouped stripe; `predicate` maps column -> (lo, hi)
-    inclusive bounds (as the column's python type, compared through the
-    same string canonicalization the stats use).  Groups whose [min,max]
-    cannot intersect are skipped WITHOUT touching their bytes — the
-    `evaluate_predicate` -> skip path of `src/row_group_filter.rs`."""
-    buf = memoryview(blob)
-    if buf.format != "B":  # pa.Buffer views are signed; see unwrap_compressed
-        buf = buf.cast("B")
-    if bytes(buf[:4]) != MAGIC_ROWGROUP:
-        raise ValueError("bad row-group stripe magic")
-    metas, stat_types = _rowgroup_meta(buf)
-    # coerce + encode bounds ONCE, against the stat column's stored type
-    enc_pred: dict[str, tuple] = {}
-    if predicate:
-        for c, (lo, hi) in predicate.items():
-            if c not in stat_types:
-                continue  # no stats for this column -> cannot prune on it
-            tag = stat_types[c]
-            enc_pred[c] = (
-                _stat_bytes(_coerce_bound(lo, tag, True)) if lo is not None else None,
-                _stat_bytes(_coerce_bound(hi, tag, False)) if hi is not None else None)
-    batches = []
-    n_scanned = 0
-    for m in metas:
-        keep = True
-        if enc_pred:
-            for c, (lo, hi) in enc_pred.items():
-                if c not in m["stats"]:
-                    continue
-                mn, mx = m["stats"][c]
-                if lo is not None and mx < lo:
-                    keep = False
-                if hi is not None and mn > hi:
-                    keep = False
-        if keep:
-            sub = bytes(buf[m["offset"]: m["offset"] + m["blob_len"]])
-            batches.append(decode_stripe(sub, columns=columns))
-            n_scanned += m["n_rows"]
-    if _stats is not None:
-        _stats["groups_total"] = len(metas)
-        _stats["groups_decoded"] = len(batches)
-        _stats["rows_decoded"] = n_scanned
-    if not batches:
-        first = bytes(buf[metas[0]["offset"]:
-                          metas[0]["offset"] + metas[0]["blob_len"]])
-        return decode_stripe(first, columns=columns).slice(0, 0)
-    tbl = pa.Table.from_batches(batches).combine_chunks()
-    return tbl.to_batches()[0] if tbl.num_rows else batches[0].slice(0, 0)
-
-
-def _respace_primitive(vals: np.ndarray, validity, n_rows: int, atype) -> pa.Array:
-    """decode_spaced (`src/encoding/mod.rs:64-91`): out[mask] = decoded."""
-    if validity is None:
-        return pa.array(vals, type=atype)
-    if atype == pa.bool_():
-        out = np.zeros(n_rows, dtype=bool)
-        out[validity] = vals.astype(bool)
-        return pa.array(out, type=atype, mask=~validity)
-    out = np.zeros(n_rows, dtype=vals.dtype)
-    out[validity] = vals
-    return pa.array(out, type=atype, mask=~validity)
-
-
-def _respace_float(vals: np.ndarray, validity, n_rows: int, atype) -> pa.Array:
-    if validity is None:
-        return pa.array(vals, type=atype)
-    out = np.zeros(n_rows, dtype=vals.dtype)
-    out[validity] = vals
-    return pa.array(out, type=atype, mask=~validity)
-
-
-def _decode_string(codec, aux, stream, n_valid, validity, n_rows, atype) -> pa.Array:
-    if codec in (C_STRING_DIRECT, C_FSST):
-        lengths = rle_v2_decode(stream(K_LENGTH), n_valid, signed=False)
-        blob = fsst_decompress(stream(K_DATA)) if codec == C_FSST \
-            else stream(K_DATA)
-        offsets_valid = np.zeros(n_valid + 1, dtype=np.int64)
-        np.cumsum(lengths, out=offsets_valid[1:])
-        if validity is None:
-            values = pa.Array.from_buffers(
-                pa.large_binary(), n_valid,
-                [None, pa.py_buffer(offsets_valid.tobytes()), pa.py_buffer(bytes(blob))],
-            )
-            return values.cast(atype)
-        offsets = np.zeros(n_rows + 1, dtype=np.int64)
-        idx = np.cumsum(validity)
-        offsets[1:] = offsets_valid[idx]
-        nullmask = np.packbits(validity, bitorder="little")
-        values = pa.Array.from_buffers(
-            pa.large_binary(), n_rows,
-            [pa.py_buffer(nullmask.tobytes()), pa.py_buffer(offsets.tobytes()),
-             pa.py_buffer(bytes(blob))],
-            null_count=int(n_rows - validity.sum()),
-        )
-        return values.cast(atype)
-    if codec == C_STRING_DICT:
-        dict_size = aux
-        dict_lengths = rle_v2_decode(stream(K_DICT_LENGTH), dict_size, signed=False)
-        dblob = stream(K_DICT_DATA)
-        doffsets = np.zeros(dict_size + 1, dtype=np.int64)
-        np.cumsum(dict_lengths, out=doffsets[1:])
-        dictionary = pa.Array.from_buffers(
-            pa.large_binary(), dict_size,
-            [None, pa.py_buffer(doffsets.tobytes()), pa.py_buffer(bytes(dblob))],
-        ).cast(pa.binary())
-        indices = rle_v2_decode(stream(K_DATA), n_valid, signed=False,
-                                out_dtype=np.int32)
-        if validity is None:
-            darr = pa.DictionaryArray.from_arrays(pa.array(indices, pa.int32()), dictionary)
-            return darr.cast(atype)
-        full_idx = np.zeros(n_rows, dtype=np.int32)
-        full_idx[validity] = indices
-        darr = pa.DictionaryArray.from_arrays(
-            pa.array(full_idx, pa.int32(), mask=~validity), dictionary)
-        return darr.cast(atype)
-    raise ValueError(f"unknown string codec {codec}")
+    """Decode a native stripe from bytes or a zero-copy buffer
+    (pa.Buffer, memoryview).  `columns` projects: unprojected streams
+    are never touched (the analog of `src/projection.rs` +
+    `src/stripe.rs:159`).  Timestamps decode at microseconds."""
+    tbl = read_orc(blob, columns=columns, timestamp_precision="us")
+    batches = tbl.to_batches()
+    if len(batches) == 1:  # one stripe: single-chunk columns
+        return batches[0]
+    return pa.RecordBatch.from_arrays(
+        [c.combine_chunks() for c in tbl.columns], schema=tbl.schema)

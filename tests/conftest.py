@@ -22,3 +22,20 @@ def spark():
     )
     yield spark
     spark.stop()
+
+
+@pytest.fixture
+def indexed_stripe():
+    """Encodes a batch as a native stripe with a ROW_INDEX every
+    `stride` rows (what the decode_rowgroup_pruned oracle row writes)."""
+    import io
+
+    from orc_rust_spark.stripes import _NativeWriter
+
+    def encode(batch, stride: int) -> bytes:
+        sink = io.BytesIO()
+        w = _NativeWriter(sink, batch.schema, row_index_stride=stride)
+        w.write_batch(batch)
+        w.close()
+        return sink.getvalue()
+    return encode

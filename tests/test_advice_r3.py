@@ -1,5 +1,6 @@
 """Round-3 ADVICE regression tests: writerTimezone conversion on
-real-ORC read/write, typed row-group predicate bounds, and nested
+real-ORC read/write, typed row-group predicate bounds (on native
+stripes written with a ROW_INDEX), and nested
 timestamp normalization through the Spark ORC source."""
 
 from __future__ import annotations
@@ -14,10 +15,6 @@ po = pytest.importorskip("pyarrow.orc")
 
 from orc_rust_spark.sources.orc_reader import read_orc
 from orc_rust_spark.sources.orc_writer import OrcWriter, write_orc
-from orc_rust_spark.stripes import (
-    decode_stripe_rowgroups,
-    encode_stripe_rowgroups,
-)
 
 LA = "America/Los_Angeles"
 
@@ -99,15 +96,13 @@ def _rg_batch(n=6000):
     })
 
 
-def test_rowgroup_predicate_int_bound_on_float_column():
+def test_rowgroup_predicate_int_bound_on_float_column(indexed_stripe):
     """The ADVICE failure mode: int bounds against a float stat column
-    compared sign-biased-int bytes to IEEE-total-order bytes.  Bounds
-    now coerce to the column's stored type before encoding."""
+    must compare numerically, never prune a matching group."""
     b = _rg_batch()
-    blob = encode_stripe_rowgroups(b, group_rows=1000)
+    blob = indexed_stripe(b, 1000)
     stats: dict = {}
-    out = decode_stripe_rowgroups(blob, predicate={"f": (1, 10)},
-                                  _stats=stats)
+    out = read_orc(blob, predicate={"f": (1, 10)}, _stats=stats)
     # pruning is conservative: every row with 1 <= f <= 10 must survive
     f = np.asarray(out.column("f"))
     expect = np.asarray(b.column("f"))
@@ -117,21 +112,26 @@ def test_rowgroup_predicate_int_bound_on_float_column():
     assert stats["groups_decoded"] < stats["groups_total"]
 
 
-def test_rowgroup_predicate_float_bound_on_int_column():
+def test_rowgroup_predicate_float_bound_on_int_column(indexed_stripe):
     b = _rg_batch()
-    blob = encode_stripe_rowgroups(b, group_rows=1000)
+    blob = indexed_stripe(b, 1000)
     stats: dict = {}
-    out = decode_stripe_rowgroups(blob, predicate={"k": (1500.5, 1700.2)},
-                                  _stats=stats)
+    out = read_orc(blob, predicate={"k": (1500.5, 1700.2)}, _stats=stats)
     k = np.asarray(out.column("k"))
     assert set(range(1501, 1701)) <= set(k.tolist())
     assert stats["groups_decoded"] < stats["groups_total"]
 
 
-def test_rowgroup_predicate_mismatched_bound_raises():
+def test_rowgroup_predicate_mismatched_bound_raises(indexed_stripe):
+    """A string bound on a numeric column (or the reverse) could never
+    prune: it raises, at read and at stripe planning alike."""
+    from orc_rust_spark.sources.orc_reader import (read_metadata,
+                                                   stripes_matching)
+    from orc_rust_spark.sources.predicate import Predicate as P
     b = _rg_batch()
-    blob = encode_stripe_rowgroups(b, group_rows=1000)
-    with pytest.raises(TypeError):
-        decode_stripe_rowgroups(blob, predicate={"s": (1, 10)})
-    with pytest.raises(TypeError):
-        decode_stripe_rowgroups(blob, predicate={"k": ("a", "b")})
+    blob = indexed_stripe(b, 1000)
+    for bad in ({"s": (1, 10)}, {"k": ("a", "b")}, P.eq("f", "7")):
+        with pytest.raises(TypeError):
+            read_orc(blob, predicate=bad)
+        with pytest.raises(TypeError):
+            stripes_matching(read_metadata(blob), bad)

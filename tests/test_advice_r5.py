@@ -5,6 +5,9 @@
    Predicate.ne('col', 2**70) on a bloom-indexed int column.
 2. `orc_tools metadata` must not read the whole file to list bloom
    columns; only the tail + stripe 0's covering byte range.
+3. Timestamps nested in structs and lists decode at the requested unit
+   (they used to decode at ns while the schema said otherwise), through
+   read_orc and through native stripes.
 """
 
 from __future__ import annotations
@@ -99,3 +102,36 @@ def test_metadata_reads_only_tail_and_stripe0(tmp_path, monkeypatch):
     # tail + one stripe of four (plus slack): far below the whole file
     assert read_counter["bytes"] < 0.55 * fsize, \
         (read_counter["bytes"], fsize)
+
+
+def _nested_ts_table():
+    import datetime as dt
+    ts = [dt.datetime(2015, 7, 4, 8, 0, 0, 123456),
+          dt.datetime(1999, 1, 2, 3, 4, 5), None]
+    return pa.table({
+        "st": pa.array([{"t": t, "k": i} for i, t in enumerate(ts)],
+                       pa.struct([("t", pa.timestamp("us")),
+                                  ("k", pa.int64())])),
+        "lt": pa.array([[t, t] if t else [] for t in ts],
+                       pa.list_(pa.timestamp("us"))),
+    })
+
+
+def test_nested_timestamps_read_at_requested_unit(tmp_path):
+    from orc_rust_spark.sources.orc_reader import arrow_schema, read_metadata
+    path = str(tmp_path / "nested_ts.orc")
+    tbl = _nested_ts_table()
+    write_orc(path, tbl)
+    got = read_orc(path, timestamp_precision="us")
+    assert got.schema == tbl.schema
+    assert got.schema == arrow_schema(read_metadata(path),
+                                      timestamp_precision="us")
+    assert got.to_pylist() == tbl.to_pylist()
+
+
+def test_nested_timestamps_native_stripe_roundtrip():
+    from orc_rust_spark.stripes import decode_stripe, encode_stripe
+    batch = _nested_ts_table().to_batches()[0]
+    out = decode_stripe(encode_stripe(batch))
+    assert out.schema == batch.schema
+    assert out.equals(batch)

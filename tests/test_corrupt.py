@@ -8,25 +8,21 @@ import numpy as np
 import pyarrow as pa
 import pytest
 
-from orc_rust_spark.stripes import (
-    decode_stripe,
-    decode_stripe_rowgroups,
-    encode_stripe,
-    encode_stripe_rowgroups,
-    stripe_num_rows,
-    unwrap_compressed,
-    wrap_compressed,
-)
+from orc_rust_spark.sources.orc_reader import read_metadata, read_orc
+from orc_rust_spark.stripes import decode_stripe, encode_stripe
 
 
-def _blob():
+def _batch():
     rng = np.random.default_rng(0)
-    b = pa.record_batch({
+    return pa.record_batch({
         "k": pa.array(np.arange(5000, dtype=np.int64)),
         "s": pa.array([f"row{i}" for i in range(5000)]),
         "f": pa.array(rng.standard_normal(5000)),
     })
-    return encode_stripe(b)
+
+
+def _blob():
+    return encode_stripe(_batch())
 
 
 def test_bad_magic():
@@ -47,46 +43,51 @@ def test_overlong_stream_length():
     blob = bytearray(_blob())
     ok = decode_stripe(bytes(blob))
     assert ok.num_rows == 5000
-    # inflate a directory length varint high byte: find the directory by
-    # re-encoding with a poisoned stream table is intrusive; instead chop
-    # the payload so the directory's total exceeds the blob
+    # chop the payload: the tail no longer ends in a postscript, and a
+    # stripe that claims more bytes than the buffer holds is refused
     with pytest.raises(ValueError, match="truncated"):
         decode_stripe(bytes(blob[: len(blob) - 100]))
+    with pytest.raises(ValueError, match="truncated"):
+        decode_stripe(bytes(blob[:3]) + bytes(blob[200:]))
 
 
 def test_corrupt_compressed_wrapper():
-    blob = _blob()
-    wrapped = wrap_compressed(blob, 1)  # zlib
-    assert unwrap_compressed(wrapped) == blob
-    # flip bytes inside the deflate body -> zlib error, not silent data
-    bad = bytearray(wrapped)
+    codecs_plain: dict = {}
+    codecs_zlib: dict = {}
+    plain = encode_stripe(_batch(), _codecs=codecs_plain)
+    blob = encode_stripe(_batch(), _compression=1, _codecs=codecs_zlib)
+    assert decode_stripe(blob).equals(decode_stripe(plain))
+    # the manifest names the same codecs whatever the block compression
+    assert codecs_zlib == codecs_plain
+    # flip bytes inside a deflate body -> zlib error, not silent data
+    bad = bytearray(blob)
     bad[30] ^= 0xFF
     bad[31] ^= 0xFF
     with pytest.raises(Exception):
         decode_stripe(bytes(bad))
 
 
-def test_rowgroup_truncated():
+def test_rowgroup_truncated(indexed_stripe):
     b = pa.record_batch({"k": pa.array(np.arange(10_000, dtype=np.int64))})
-    blob = encode_stripe_rowgroups(b, group_rows=2000)
+    blob = indexed_stripe(b, 2000)
     with pytest.raises(Exception) as ei:
-        decode_stripe_rowgroups(blob[: len(blob) // 2])
+        read_orc(blob[: len(blob) // 2], predicate={"k": (0, 10)})
     assert isinstance(ei.value, (ValueError, IndexError))
 
 
 def test_rowgroup_bad_magic():
     with pytest.raises(ValueError, match="magic"):
-        decode_stripe_rowgroups(b"NOPE" + b"\x00" * 64)
+        read_orc(b"NOPE" + b"\x00" * 64, predicate={"k": (0, 10)})
 
 
 def test_num_rows_on_truncated_header():
-    blob = _blob()
-    assert stripe_num_rows(blob) == 5000
+    meta = read_metadata(_blob())
+    assert sum(s["n_rows"] for s in meta.stripes) == 5000
     with pytest.raises(Exception):
-        stripe_num_rows(b"OSP1")  # header cut mid-varint
+        read_metadata(b"ORC")  # nothing past the magic
 
 
-def test_stripe_bytes_deterministic():
+def test_stripe_bytes_deterministic(indexed_stripe):
     """Resume correctness depends on stripe bytes being a pure function
     of the input rows (BASELINE north_rule: idempotent resume) —
     identical batches must encode to identical blobs across calls."""
@@ -98,5 +99,5 @@ def test_stripe_bytes_deterministic():
     })
     blobs = {encode_stripe(b) for _ in range(3)}
     assert len(blobs) == 1
-    grouped = {encode_stripe_rowgroups(b, group_rows=4096) for _ in range(3)}
+    grouped = {indexed_stripe(b, 4096) for _ in range(3)}
     assert len(grouped) == 1

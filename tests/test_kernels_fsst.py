@@ -25,8 +25,11 @@ def test_roundtrip_wordlike(words):
 
 
 def test_edges():
+    # 16,000 ids "d%09d" (~160 KB): the size that once decoded one
+    # byte long, first wrong string at row 1126
+    ids = b"".join(b"d%09d" % i for i in range(16_000))
     for blob in [b"", b"a", b"ab" * 5000, bytes(range(256)) * 10,
-                 b"\xff" * 100, b"\x00" * 1000]:
+                 b"\xff" * 100, b"\x00" * 1000, ids]:
         assert fsst_decompress(fsst_compress(blob)) == blob
 
 
@@ -67,12 +70,11 @@ def test_block_compression_roundtrip():
 def test_stripe_block_compression_wrap():
     import pyarrow as pa
     from orc_rust_spark.kernels.compression import K_ZLIB
-    from orc_rust_spark.stripes import unwrap_compressed, wrap_compressed
     batch = pa.record_batch([pa.array(["word " * 50] * 200)], names=["text"])
     blob = encode_stripe(batch)
-    wrapped = wrap_compressed(blob, K_ZLIB)
-    assert unwrap_compressed(wrapped) == blob
-    rb = decode_stripe(wrapped)  # decode handles wrapped blobs directly
+    wrapped = encode_stripe(batch, _compression=K_ZLIB)
+    assert len(wrapped) * 4 < len(blob)
+    rb = decode_stripe(wrapped)  # ORC chunked compression, per stream
     assert rb.column("text").to_pylist() == batch.column("text").to_pylist()
 
 
@@ -171,50 +173,23 @@ def test_fsst_escaped_0xff_literals():
         assert fsst_decompress(fsst_compress(blob)) == blob
 
 
-def test_frontier_parse_identical_to_sequential():
-    """The lockstep frontier parse (pass A speculation + pass B resync)
-    must reproduce the single-chain greedy parse byte-for-byte."""
-    from orc_rust_spark.kernels import fsst as F
-
+def test_roundtrip_large_blobs():
+    """Blobs past 128 KiB (where a lockstep parse once took over and
+    emitted a wrong code stream) round-trip exactly."""
     rng = np.random.default_rng(17)
     text = (b"the quick brown fox jumps over the lazy dog " * 4000
             + bytes(rng.integers(0, 256, 20000).astype(np.uint8)))
-    data = np.frombuffer(text, dtype=np.uint8)
-    tbl = F.train(data)
-    seq = F._parse(data, tbl)
-    for seg in (256, 512, 1000):
-        old = F._SEG
-        try:
-            F._SEG = seg
-            assert np.array_equal(F._parse_frontier(data, tbl), seq)
-        finally:
-            F._SEG = old
+    escapes = rng.integers(0, 256, 200000).astype(np.uint8).tobytes()
+    for blob in (text, escapes):
+        assert fsst_decompress(fsst_compress(blob)) == blob
 
 
-def test_frontier_parse_escape_heavy():
-    from orc_rust_spark.kernels import fsst as F
-
-    rng = np.random.default_rng(23)
-    data = rng.integers(0, 256, 200000).astype(np.uint8)
-    tbl = F.train(data)
-    assert np.array_equal(F._parse(data, tbl), F._parse_frontier(data, tbl))
-    comp = F.fsst_compress_with(data, tbl)
-    assert F.fsst_decompress(comp) == data.tobytes()
-
-
-def test_frontier_parse_overrun_into_tiny_final_segment():
-    """A chain's final match may overrun into (and fully consume) a
-    short last segment; the next chain then starts at its own end and
-    must emit nothing."""
-    from orc_rust_spark.kernels import fsst as F
-
-    base = b"abcdefgh" * (F._SEG // 8)  # highly symbolizable
+def test_roundtrip_segment_overrun_tails():
+    """A greedy match may overrun a short tail of a symbolizable run."""
+    base = b"abcdefgh" * 64
     rng = np.random.default_rng(31)
     for tail in range(1, 9):
-        for seed in range(3):
-            mix = bytes(rng.integers(97, 105, F._SEG).astype(np.uint8))
-            data = np.frombuffer((base + mix)[: F._SEG + tail], np.uint8)
-            tbl = F.train(np.frombuffer(base, np.uint8))
-            seq = F._parse(data, tbl)
-            got = F._parse_frontier(data, tbl)
-            assert np.array_equal(got, seq), (tail, seed)
+        for _ in range(3):
+            mix = bytes(rng.integers(97, 105, 512).astype(np.uint8))
+            blob = (base + mix)[: 512 + tail]
+            assert fsst_decompress(fsst_compress(blob)) == blob

@@ -97,9 +97,9 @@ def test_spark_relation_roundtrip_struct_and_map(spark):
 
 def test_union_sparse_roundtrip():
     """Sparse union (`src/array_decoder/union.rs:36-163` analog): TAG
-    byte-RLE stream + full-length children; no Spark type exists
-    (SURVEY §1.2) so this is a stripe-format capability exercised at
-    the kernel level."""
+    byte-RLE stream + the ORC union's dense children, re-spaced to
+    full length on decode; no Spark type exists (SURVEY §1.2) so this
+    is a stripe-format capability exercised at the kernel level."""
     import numpy as np
     import pyarrow as pa
     from orc_rust_spark.stripes import decode_stripe, encode_stripe
@@ -118,12 +118,16 @@ def test_union_sparse_roundtrip():
     assert pa.types.is_union(u.type)
     got_tags = np.frombuffer(u.buffers()[1], np.int8)[:n]
     assert np.array_equal(got_tags, tags)
-    assert u.field(0).to_pylist() == ints.to_pylist()
-    assert u.field(1).to_pylist() == strs.to_pylist()
-    # per-row selected value follows the tag
-    for i in rng.integers(0, n, 25):
-        exp = ints[int(i)].as_py() if tags[i] == 0 else strs[int(i)].as_py()
-        assert u[int(i)].as_py() == exp
+    # each child round-trips at the rows its tag selects (a union
+    # stores only those: slots of other tags decode null)
+    for i, child in enumerate((ints, strs)):
+        sel = pa.array(tags == i)
+        assert u.field(i).filter(sel).to_pylist() == \
+            child.filter(sel).to_pylist()
+    # every row's selected value follows the tag
+    exp = np.where(tags == 0, ints.to_numpy(zero_copy_only=False), None)
+    exp[tags == 1] = np.asarray(strs.to_pylist(), dtype=object)[tags == 1]
+    assert u.to_pylist() == exp.tolist()
     # projection must skip the whole union subtree
     proj = decode_stripe(blob, columns=["k"])
     assert proj.schema.names == ["k"]

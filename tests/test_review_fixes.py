@@ -11,12 +11,7 @@ import pytest
 
 pa = pytest.importorskip("pyarrow")
 
-from orc_rust_spark.stripes import (
-    C_TS2,
-    ColumnPlan,
-    decode_stripe,
-    encode_stripe,
-)
+from orc_rust_spark.stripes import decode_stripe, encode_stripe
 from orc_rust_spark.sources.orc_reader import arrow_schema, read_metadata, read_orc
 from orc_rust_spark.sources.orc_writer import write_orc
 
@@ -32,7 +27,7 @@ def test_ts2_far_dates_roundtrip():
     two-stream encoding must carry them exactly."""
     ts = pa.array(FAR_DATES, pa.timestamp("us"))
     batch = pa.record_batch([ts], names=["t"])
-    out = decode_stripe(encode_stripe(batch, plans={"t": ColumnPlan(codec=C_TS2)}))
+    out = decode_stripe(encode_stripe(batch))
     assert out.column("t").to_pylist() == ts.to_pylist()
 
 

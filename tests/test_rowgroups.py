@@ -1,19 +1,16 @@
-"""Sub-stripe row-group statistics + selective decode
-(`src/row_index.rs` / `src/row_group_filter.rs` analog): groups whose
-min/max can't intersect the predicate are skipped without touching
-their bytes, and the decoded-row count actually shrinks."""
+"""Row-group pruning on native stripes (`src/row_index.rs` /
+`src/row_group_filter.rs` analog): a stripe written with a ROW_INDEX
+carries per-group statistics, and a predicate read skips the groups
+whose min/max cannot intersect it without touching their bytes, so the
+decoded-row count actually shrinks."""
 
 from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
-import pytest
 
-from orc_rust_spark.stripes import (
-    decode_stripe_rowgroups,
-    encode_stripe_rowgroups,
-    stripe_num_rows,
-)
+from orc_rust_spark.sources.orc_reader import read_metadata, read_orc
+from orc_rust_spark.stripes import decode_stripe
 
 
 def _batch(n=50_000, seed=1):
@@ -26,22 +23,21 @@ def _batch(n=50_000, seed=1):
     })
 
 
-def test_rowgroup_roundtrip_full():
+def test_rowgroup_roundtrip_full(indexed_stripe):
     b = _batch()
-    blob = encode_stripe_rowgroups(b, group_rows=8000)
-    out = decode_stripe_rowgroups(blob)
-    assert out.num_rows == b.num_rows
-    assert out.column("k").to_pylist() == b.column("k").to_pylist()
-    assert out.column("s").to_pylist() == b.column("s").to_pylist()
-    assert stripe_num_rows(blob) == b.num_rows
+    blob = indexed_stripe(b, 8000)
+    out = decode_stripe(blob)
+    assert out.equals(b)
+    meta = read_metadata(blob)
+    assert meta.row_index_stride == 8000
+    assert sum(s["n_rows"] for s in meta.stripes) == b.num_rows
 
 
-def test_rowgroup_pruned_decode_skips_bytes():
+def test_rowgroup_pruned_decode_skips_bytes(indexed_stripe):
     b = _batch()
-    blob = encode_stripe_rowgroups(b, group_rows=5000)
+    blob = indexed_stripe(b, 5000)
     stats: dict = {}
-    out = decode_stripe_rowgroups(blob, predicate={"k": (12_000, 14_000)},
-                                  _stats=stats)
+    out = read_orc(blob, predicate={"k": (12_000, 14_000)}, _stats=stats)
     # only the one group containing [12000, 14000] may decode (boundary
     # groups included); the other 9 are skipped without being read
     assert stats["groups_total"] == 10
@@ -52,52 +48,49 @@ def test_rowgroup_pruned_decode_skips_bytes():
     assert set(range(12_000, 14_001)) <= set(k.tolist())
 
 
-def test_rowgroup_string_predicate():
+def test_rowgroup_string_predicate(indexed_stripe):
     b = _batch()
-    blob = encode_stripe_rowgroups(b, group_rows=5000)
+    blob = indexed_stripe(b, 5000)
     stats: dict = {}
-    out = decode_stripe_rowgroups(
-        blob, predicate={"s": ("id00042000", "id00042999")}, _stats=stats)
+    out = read_orc(blob, predicate={"s": ("id00042000", "id00042999")},
+                   _stats=stats)
     assert stats["groups_decoded"] == 1
     vals = set(out.column("s").to_pylist())
     assert {f"id{i:08d}" for i in range(42_000, 43_000)} <= vals
 
 
-def test_rowgroup_float_and_negative_int_order():
+def test_rowgroup_float_and_negative_int_order(indexed_stripe):
     # decimal-string ordering bugs would prune matching groups here
     n = 20_000
     b = pa.record_batch({
         "x": pa.array(np.arange(-n // 2, n // 2, dtype=np.int64)),
         "y": pa.array(np.linspace(-5.0, 5.0, n)),
     })
-    blob = encode_stripe_rowgroups(b, group_rows=2000)
+    blob = indexed_stripe(b, 2000)
     stats: dict = {}
-    out = decode_stripe_rowgroups(blob, predicate={"x": (-9_999, -9_000)},
-                                  _stats=stats)
+    out = read_orc(blob, predicate={"x": (-9_999, -9_000)}, _stats=stats)
     assert stats["groups_decoded"] == 1
     assert -9_500 in set(out.column("x").to_pylist())
     stats2: dict = {}
-    out2 = decode_stripe_rowgroups(blob, predicate={"y": (-0.01, 0.01)},
-                                   _stats=stats2)
+    out2 = read_orc(blob, predicate={"y": (-0.01, 0.01)}, _stats=stats2)
     assert stats2["groups_decoded"] <= 2
     ys = np.asarray(out2.column("y"))
     assert ((ys >= -0.51) & (ys <= 0.51)).any()
 
 
-def test_rowgroup_prune_everything():
+def test_rowgroup_prune_everything(indexed_stripe):
     b = _batch(n=10_000)
-    blob = encode_stripe_rowgroups(b, group_rows=2000)
+    blob = indexed_stripe(b, 2000)
     stats: dict = {}
-    out = decode_stripe_rowgroups(blob, predicate={"k": (10**9, 10**9 + 5)},
-                                  _stats=stats)
-    assert stats["groups_decoded"] == 0
+    out = read_orc(blob, predicate={"k": (10**9, 10**9 + 5)}, _stats=stats)
+    # the stripe statistics already rule every row out
+    assert stats.get("rows_decoded", 0) == 0
     assert out.num_rows == 0
-    assert out.schema.names == b.schema.names
+    assert out.schema == b.schema
 
 
-def test_rowgroup_projection():
+def test_rowgroup_projection(indexed_stripe):
     b = _batch(n=10_000)
-    blob = encode_stripe_rowgroups(b, group_rows=4000)
-    out = decode_stripe_rowgroups(blob, columns=["k", "s"],
-                                  predicate={"k": (2_000, 2_500)})
+    blob = indexed_stripe(b, 4000)
+    out = read_orc(blob, columns=["k", "s"], predicate={"k": (2_000, 2_500)})
     assert out.schema.names == ["k", "s"]

@@ -1,15 +1,16 @@
 """Zero-copy blob decode: pa.Buffer memoryviews are SIGNED ('b'), so a
 decoder that indexes bytes >= 128 without normalizing reads negative
 values in every varint/header parse (caught live: FSST symbol counts).
-decode_stripe must produce identical results from a pa.Buffer view and
-from materialized bytes."""
+decode_stripe (and read_orc on a row-indexed stripe) must produce
+identical results from a pa.Buffer view and from materialized bytes."""
 
 from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
 
-from orc_rust_spark.stripes import decode_stripe, decode_stripe_rowgroups, encode_stripe
+from orc_rust_spark.sources.orc_reader import read_orc
+from orc_rust_spark.stripes import decode_stripe, encode_stripe
 
 
 def _stripe_batch(n=4000):
@@ -36,10 +37,13 @@ def test_decode_stripe_from_pa_buffer_matches_bytes():
     assert decode_stripe(arr2[0].as_buffer()).equals(via_bytes)
 
 
-def test_decode_rowgroups_from_pa_buffer():
-    from orc_rust_spark.stripes import encode_stripe_rowgroups
-    blob = encode_stripe_rowgroups(_stripe_batch(), group_rows=1000)
+def test_decode_rowgroups_from_pa_buffer(indexed_stripe):
+    blob = indexed_stripe(_stripe_batch(), 1000)
     arr = pa.array([blob], pa.binary())
-    got = decode_stripe_rowgroups(arr[0].as_buffer())
-    want = decode_stripe_rowgroups(arr[0].as_py())
+    stats: dict = {}
+    pred = {"n_tok": (5, 9)}
+    got = read_orc(arr[0].as_buffer(), predicate=pred, _stats=stats)
+    want = read_orc(arr[0].as_py(), predicate=pred)
     assert got.equals(want)
+    assert read_orc(arr[0].as_buffer()).equals(read_orc(blob))
+    assert stats["groups_total"] == 4

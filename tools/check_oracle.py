@@ -7,13 +7,20 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+ROOT = str(Path(__file__).resolve().parent.parent)
+sys.path.insert(0, ROOT)
+# Spark's Python workers import the program too: put the checkout root
+# on their PYTHONPATH, so the check runs from any directory
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    [ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep)
+              if p and p != ROOT])
 
 
 def norm(v):
