@@ -173,15 +173,20 @@ def test_fsst_escaped_0xff_literals():
         assert fsst_decompress(fsst_compress(blob)) == blob
 
 
-def test_roundtrip_large_blobs():
-    """Blobs past 128 KiB (where a lockstep parse once took over and
-    emitted a wrong code stream) round-trip exactly."""
+def test_roundtrip_large_text_blob():
+    """A text blob past 128 KiB (where a lockstep parse once took over
+    and emitted a wrong code stream) round-trips exactly."""
     rng = np.random.default_rng(17)
     text = (b"the quick brown fox jumps over the lazy dog " * 4000
             + bytes(rng.integers(0, 256, 20000).astype(np.uint8)))
-    escapes = rng.integers(0, 256, 200000).astype(np.uint8).tobytes()
-    for blob in (text, escapes):
-        assert fsst_decompress(fsst_compress(blob)) == blob
+    assert fsst_decompress(fsst_compress(text)) == text
+
+
+def test_roundtrip_large_escape_heavy_blob():
+    """200k random bytes past 128 KiB: nearly every byte is an escape."""
+    rng = np.random.default_rng(23)
+    blob = rng.integers(0, 256, 200000).astype(np.uint8).tobytes()
+    assert fsst_decompress(fsst_compress(blob)) == blob
 
 
 def test_roundtrip_segment_overrun_tails():
