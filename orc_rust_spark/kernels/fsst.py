@@ -34,25 +34,6 @@ MAX_LEN = 8
 ESCAPE = 255
 
 
-def _prefix_keys(data: np.ndarray, length: int) -> np.ndarray:
-    """u64 big-endian key of the `length`-byte prefix at each position
-    (positions past n-length get right-zero-padded keys).  One strided
-    copy + big-endian view instead of 8 shift/or passes."""
-    n = len(data)
-    padded = np.zeros(n + MAX_LEN, dtype=np.uint8)
-    padded[:n] = data
-    from numpy.lib.stride_tricks import sliding_window_view
-    win = sliding_window_view(padded, MAX_LEN)[:n]
-    return np.ascontiguousarray(win).view(">u8").ravel().astype(U64, copy=False)
-
-
-def _sym_key(sym: bytes) -> int:
-    k = 0
-    for i, b in enumerate(sym):
-        k |= b << (8 * (MAX_LEN - 1 - i))
-    return k
-
-
 _H3_BITS = 16  # 65536 slots for <=254 long symbols: collisions ~0.2%
 _H3_MULT = np.uint32(0x9E3779B1)  # Fibonacci hashing of the 3-byte prefix
 

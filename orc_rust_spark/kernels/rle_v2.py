@@ -10,6 +10,13 @@ identical emitted bytes.  Sub-encoding byte layouts follow
 `short_repeat.rs:29-81`, `direct.rs:39-95`, `delta.rs:44-182`,
 `patched_base.rs:38-276`.
 
+One deliberate departure from the reference writer: a patched-base
+block whose patch list would not be 1..31 long is written DIRECT.  The
+reference emits such blocks with a zero patch count (`pl==0`), which
+ORC's C++ and Java readers refuse, or ORs an overflowing count into the
+5-bit field.  The decoder still reads `pl==0` blocks, since files the
+reference wrote carry them.
+
 All integer types are handled in the int64/uint64 domain; `width_bits`
 (16/32/64) only affects the max-min overflow check, mirroring the
 reference's N-typed `max.checked_sub(&min)` (`mod.rs:450`).
@@ -156,13 +163,16 @@ def _write_patched_base(
     base: int,
     brl_100p_bit_width: int,
     brl_95p_bit_width: int,
-) -> None:
-    """`patched_base.rs:219-276`."""
+) -> bool:
+    """`patched_base.rs:219-276`.  Writes nothing and returns False when
+    the patch list would not be 1..31 long (see the module docstring)."""
     patch_bits_width = get_closest_fixed_bits(brl_100p_bit_width - brl_95p_bit_width)
     if patch_bits_width == 64:
         patch_bits_width, brl_95p_bit_width = 56, 8
 
     patches, patch_gap_width = _derive_patches(brl, patch_bits_width, brl_95p_bit_width)
+    if not 1 <= len(patches) <= 31:
+        return False
 
     encoded_bit_width = encode_bit_width(brl_95p_bit_width)
     run_length = len(brl) - 1
@@ -184,6 +194,7 @@ def _write_patched_base(
             get_closest_fixed_bits(patch_gap_width + patch_bits_width),
         )
     )
+    return True
 
 
 # ---------------------------------------------------------------------------
@@ -256,9 +267,8 @@ def _determine_variable(
     max_data_value = int(brl.max())
     brl_100p = get_closest_aligned_bit_width(bits_used_scalar(max_data_value))
     brl_95p = calculate_percentile_bits(brl.astype(U64), 0.95)
-    if brl_100p != brl_95p:
-        _write_patched_base(out, brl, vmin, brl_100p, brl_95p)
-    else:
+    if brl_100p == brl_95p or not _write_patched_base(
+            out, brl, vmin, brl_100p, brl_95p):
         _write_direct(out, zz_lits, None)
 
 
@@ -383,7 +393,7 @@ def _extract_run_length(first_byte: int, second_byte: int) -> int:
     return (((first_byte & 0x01) << 8) | second_byte) + 1
 
 
-def rle_v2_decode(buf, n: int, signed: bool = True) -> np.ndarray:
+def rle_v2_decode_ref(buf, n: int, signed: bool = True) -> np.ndarray:
     """Decode n values from an RLEv2 byte stream; returns int64 array."""
     if n == 0:
         return np.empty(0, dtype=I64)
@@ -518,6 +528,5 @@ def _read_patched_base(buf, pos: int, header: int) -> tuple[np.ndarray, int]:
 # fast batch encoder/decoder are the public paths (byte-/value-identical;
 # see rle_v2_batch.py).  Imported at the bottom to break the module cycle;
 # the scalar implementations above remain as parity baselines for tests.
-rle_v2_decode_ref = rle_v2_decode
 from .rle_v2_batch import rle_v2_encode_batch as rle_v2_encode  # noqa: E402
-from .rle_v2_batch import rle_v2_decode_batch as rle_v2_decode  # noqa: E402,F811
+from .rle_v2_batch import rle_v2_decode_batch as rle_v2_decode  # noqa: E402

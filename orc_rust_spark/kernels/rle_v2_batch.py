@@ -1,6 +1,8 @@
 """Batch-vectorized ORC RLEv2 encoder, byte-identical to
-`rle_v2.rle_v2_encode` (the run-at-a-time port of the reference state
+`rle_v2.rle_v2_encode_ref` (the run-at-a-time port of the reference state
 machine, `src/encoding/integer/rle_v2/mod.rs:255-531`) but ~20x faster.
+Like that port it writes only spec-valid RLEv2: a patched-base block
+whose patch list would not be 1..31 long is written DIRECT.
 
 Strategy (SURVEY §7.3 "vectorizing the run state machine"):
 
@@ -47,7 +49,6 @@ from .util import (
     I64_MIN,
     U64,
     bits_used,
-    bits_used_scalar,
     get_closest_fixed_bits,
     rle_v2_encode_bit_width,
     zigzag_encode,
@@ -59,96 +60,12 @@ _CAT_VAR_DELTA = 2
 _CAT_PATCHED = 3
 
 
-def _segments(v: np.ndarray) -> list[tuple[int, int, int]]:
-    """Replay of the state-machine control flow (`rle_v2.rle_v2_encode`)
-    emitting (kind, start, len) with kind 0=literal block, 1=fixed run.
-
-    Run detection finds ONLY the >=3-value runs directly (two shifted
-    compares + a nonzero over run interiors) instead of materializing
-    every value-change boundary — on zipf token data most runs are
-    length 1-2, so the old starts/lens arrays were ~40 bytes per input
-    value of pure memory traffic."""
-    n = len(v)
-    segs: list[tuple[int, int, int]] = []
-    ap = segs.append
-    M = MAX_RUN_LENGTH
-    if n < 3:
-        if n:
-            ap((0, 0, n))
-        return segs
-    eq = v[1:] == v[:-1]
-    m3 = eq[1:] & eq[:-1]  # m3[i] <=> v[i] == v[i+1] == v[i+2]
-    pos = np.nonzero(m3)[0]
-    if len(pos):
-        brk = np.nonzero(np.diff(pos) > 1)[0]
-        rs = np.concatenate(([pos[0]], pos[brk + 1]))
-        rend = np.concatenate((pos[brk], [pos[-1]])) + 3
-        rs_l = rs.tolist()
-        rlen_l = (rend - rs).tolist()
-    else:
-        rs_l = []
-        rlen_l = []
-
-    lit_a = 0
-    lit_b = 0
-    fixed_idx = -1
-    fixed_count = 0
-
-    for s, length in zip(rs_l, rlen_l):
-        if fixed_idx >= 0:
-            ap((1, fixed_idx, fixed_count))
-            fixed_idx = -1
-        # bulk literals up to the run start
-        lit_b = s
-        while lit_b - lit_a >= M:
-            ap((0, lit_a, M))
-            lit_a += M
-        # feed the long run
-        consumed = 0
-        m = lit_b - lit_a
-        if m > 0:
-            if m == M - 1:
-                ap((0, lit_a, s + 1 - lit_a))
-                consumed = 1
-            elif m == M - 2:
-                ap((0, lit_a, s + 2 - lit_a))
-                consumed = 2
-            else:
-                ap((0, lit_a, s - lit_a))
-            lit_a = lit_b = s + consumed
-        rem = length - consumed
-        for _ in range(rem // M):
-            ap((1, s, M))
-        r = rem % M
-        end = s + length
-        if r == 0:
-            lit_a = lit_b = end
-        elif r <= 2:
-            lit_a, lit_b = end - r, end
-        else:
-            lit_a = lit_b = end
-            fixed_idx, fixed_count = end - r, r
-
-    if fixed_idx >= 0 and lit_b < n:
-        ap((1, fixed_idx, fixed_count))
-        fixed_idx = -1
-    lit_b = n
-    while lit_b - lit_a >= M:
-        ap((0, lit_a, M))
-        lit_a += M
-
-    if fixed_idx >= 0:
-        ap((1, fixed_idx, fixed_count))
-    elif lit_b > lit_a:
-        ap((0, lit_a, lit_b - lit_a))
-    return segs
-
-
 def _segments_arrays(v: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Fully vectorized replay of `_segments` returning (kind, start, len)
-    arrays — byte-order-identical segment plan without the O(#runs)
-    Python loop (on zipf token data ~93k runs/stripe made that loop and
-    its list appends ~40% of encode wall).
+    """Fully vectorized replay of the state machine's control flow
+    (`rle_v2.rle_v2_encode_ref`) returning (kind, start, len) arrays,
+    kind 0 = literal block, 1 = fixed run — no O(#runs) Python loop (on
+    zipf token data ~93k runs/stripe made such a loop ~40% of encode
+    wall).
 
     The only sequential dependency in the state machine is the 0..2-value
     literal *carry* between consecutive runs.  The carry map of run i is
@@ -336,7 +253,7 @@ def _scatter_flat(out: np.ndarray, starts: np.ndarray, lens: np.ndarray,
 
 
 def rle_v2_encode_batch(values: np.ndarray, signed: bool = True,
-                        width_bits: int = 64, interop: bool = False) -> bytes:
+                        width_bits: int = 64) -> bytes:
     # int32-domain fast path: token data is array<int32>; keeping the
     # gathered values and zigzag arrays 32-bit halves the memory traffic
     # of classification/emission while every emitted byte stays identical
@@ -368,7 +285,7 @@ def rle_v2_encode_batch(values: np.ndarray, signed: bool = True,
     if len(lit_sids):
         writers.append(_plan_literals(
             v, sstart[lit_sids], sslen[lit_sids], lit_sids, seg_len, signed,
-            width_bits, narrow, interop))
+            width_bits, narrow))
 
     pos = np.zeros(S + 1, dtype=np.int64)
     np.cumsum(seg_len, out=pos[1:])
@@ -452,7 +369,7 @@ def _per_len(counts: np.ndarray, percentile: float) -> np.ndarray:
 
 
 def _plan_literals(v, la, ll, lit_sids, seg_len, signed, width_bits,
-                   narrow=False, interop=False):
+                   narrow=False):
     """Classify every literal block (vectorized decision tree,
     `mod.rs:422-531`), compute grouped payload packs and exact emitted
     byte lengths, and return a writer that scatters headers, varints and
@@ -602,7 +519,6 @@ def _plan_literals(v, la, ll, lit_sids, seg_len, signed, width_bits,
     pb_nplen = np.zeros(K, dtype=np.int64)  # patch count per k
     pb_pbw = np.zeros(K, dtype=np.int64)    # patch bits width per k
     pb_t95 = np.zeros(K, dtype=np.int64)    # brl_95p per k
-    scalar_parts: dict[int, bytes] = {}     # k -> full emitted bytes
     if pc.any():
         # p95 histograms WITHOUT a second full element pass: a block
         # with vmin == 0 has base-reduced values equal to its raw
@@ -734,40 +650,18 @@ def _plan_literals(v, la, ll, lit_sids, seg_len, signed, width_bits,
             gmax = np.empty(0, dtype=np.int64)
             plens_vec = np.empty(0, dtype=np.int64)
         pgw_vec = np.maximum(bits_used(gmax.astype(U64)), 1)
-        # the 95th-percentile stop bounds outliers to <=5% of a
-        # <=512-value block (<=25 patches), and gaps sum to <=511 so at
-        # most one can exceed 255 (<=2 marker words): <=27 total.  The
-        # f32 percentile truncation can still construct overflows;
-        # interop output re-routes those blocks to DIRECT (external ORC
-        # readers reject pl fields outside 1..31, `patched_base.rs:262`
-        # writes unguarded), otherwise fail loudly instead of ORing the
-        # count into the 5-bit pl field and silently corrupting output.
-        overfull = plens_vec > 31
-        assert interop or not overfull.any(), \
-            "patched-base patch count overflows 5-bit field"
-        # defaults for patched blocks whose p95 mask covers every value
-        # (no patch elements): pl=0, gap width 1 — our decoder reads
-        # them fine, but external readers reject pl==0, so interop
-        # re-routes them to DIRECT below (with the >31 overflows)
-        pb_pgw[jj] = 1
+        # a patch list must be 1..31 long: ORC readers reject pl==0
+        # (a patched block whose p95 mask covers every value), and the
+        # 5-bit pl field cannot hold more than 31 (the 95th-percentile
+        # stop bounds patches to <=25 plus <=2 jump markers, but the f32
+        # percentile truncation can still construct overflows).  Such
+        # blocks are written DIRECT by the vectorized emission below.
         pb_pbw[jj] = pbw_k[jj]
         pb_t95[jj] = t95_k[jj]
         pb_pgw[vb_ids] = pgw_vec
         pb_nplen[vb_ids] = plens_vec
-        if interop:
-            reroute = np.concatenate(
-                (vb_ids[overfull], np.setdiff1d(jj, vb_ids)))
-            for k in reroute.tolist():
-                k = int(k)
-                ln = int(ll[k])
-                w = int(_ALIGNED_WIDTH_LUT[bits_used_scalar(int(zmax[k]))])
-                cat[k] = _CAT_DIRECT
-                ebw = rle_v2_encode_bit_width(w)
-                el = ln - 1
-                scalar_parts[k] = bytes(
-                    (_HDR_DIRECT | (ebw << 1) | (el >> 8), el & 0xFF)) + \
-                    pack_ints(np.ascontiguousarray(
-                        zzg[bnd[k]: bnd[k] + ln]).astype(U64, copy=False), w)
+        npl = pb_nplen[jj]
+        cat[jj[(npl == 0) | (npl > 31)]] = _CAT_DIRECT
 
     patched = (cat == _CAT_PATCHED)
     pk = np.nonzero(patched)[0]
@@ -779,8 +673,6 @@ def _plan_literals(v, la, ll, lit_sids, seg_len, signed, width_bits,
 
     direct = cat == _CAT_DIRECT
     dwidth = np.where(direct, _ALIGNED_WIDTH_LUT[bits_used(zmax)], 0)
-    for k in scalar_parts:      # interop-rerouted blocks: fully scalar
-        direct[k] = False
     dks = np.nonzero(direct)[0]
     if len(dks):
         dw = dwidth[dks]
@@ -959,7 +851,7 @@ def _plan_literals(v, la, ll, lit_sids, seg_len, signed, width_bits,
         np.cumsum(e_ll, out=ecum[1:])
         # sparse high-bit strip at the patch positions, mapped into the
         # width-sorted emission order
-        live = cat[pb_] == _CAT_PATCHED  # interop reroutes drop out
+        live = cat[pb_] == _CAT_PATCHED  # DIRECT reroutes drop out
         if live.any():
             sstart = np.zeros(K, dtype=np.int64)
             sstart[pk[order]] = ecum[:-1]
@@ -989,7 +881,7 @@ def _plan_literals(v, la, ll, lit_sids, seg_len, signed, width_bits,
         posk[pk] = np.arange(len(pk), dtype=np.int64)
         if len(vb_ids):
             kk = vb_ids
-            live = cat[kk] == _CAT_PATCHED  # interop reroutes drop out
+            live = cat[kk] == _CAT_PATCHED  # DIRECT reroutes drop out
             pw_vec = _FIXED_BITS_LUT[pgw_vec + pbw_k[vb_ids]]
             for w in np.unique(pw_vec[live]):
                 w = int(w)
@@ -1001,25 +893,19 @@ def _plan_literals(v, la, ll, lit_sids, seg_len, signed, width_bits,
                     (ks, head_len[posk[ks]] + brl_plen[posk[ks]],
                      np.frombuffer(raw, dtype=np.uint8), np.diff(offs)))
 
-    for k, blob in scalar_parts.items():
-        seg_len[lit_sids[k]] = len(blob)
-
     def write(out, pos):
         base_pos = pos[lit_sids]
         for ks, mat, rlen in groups_rows:
             _scatter_rows(out, base_pos[ks], mat, rlen)
         for ks, off, blob, plens in groups_payload:
             _scatter_flat(out, base_pos[ks] + off, plens, blob)
-        for k, blob in scalar_parts.items():
-            p = int(base_pos[k])
-            out[p: p + len(blob)] = np.frombuffer(blob, dtype=np.uint8)
 
     return write
 
 
 # ---------------------------------------------------------------------------
 # Batch decoder: header scan -> group blocks by (kind, width) -> bulk
-# unpack + positional scatter.  Value-identical to `rle_v2.rle_v2_decode`.
+# unpack + positional scatter.  Value-identical to `rle_v2.rle_v2_decode_ref`.
 # ---------------------------------------------------------------------------
 
 from .bitpack import unpack_ints_segmented  # noqa: E402

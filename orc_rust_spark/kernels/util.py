@@ -173,11 +173,6 @@ _ENCODE_BIT_WIDTH_LUT32 = np.array([encode_bit_width(w) for w in range(65)], dty
 _DECODE_BIT_WIDTH_LUT = np.array([decode_bit_width(c) for c in range(32)], dtype=np.int64)
 
 
-def closest_aligned_bit_width_scalar(value: int) -> int:
-    """`mod.rs:129-131`: aligned width of a value's bit length."""
-    return get_closest_aligned_bit_width(bits_used_scalar(value))
-
-
 # ---------------------------------------------------------------------------
 # Zigzag — reference `util.rs:534-553`
 # ---------------------------------------------------------------------------
@@ -274,18 +269,6 @@ def calculate_percentile_bits(values: np.ndarray, percentile: float) -> int:
     histogram = np.bincount(codes, minlength=32)
     count = np.float32(len(bl))
     per_len = int(np.float32(np.float32(1.0) - np.float32(percentile)) * count)
-    for i in range(31, -1, -1):
-        h = int(histogram[i])
-        if per_len >= h:
-            per_len -= h
-        else:
-            return decode_bit_width(i)
-    raise AssertionError("percentile must be in (0.0, 1.0]")
-
-
-def percentile_bits_from_hist(histogram: np.ndarray, count: int, percentile: float) -> int:
-    """Same walk as calculate_percentile_bits given a precomputed histogram."""
-    per_len = int(np.float32(np.float32(1.0) - np.float32(percentile)) * np.float32(count))
     for i in range(31, -1, -1):
         h = int(histogram[i])
         if per_len >= h:

@@ -222,7 +222,7 @@ def encode_corpus(
 
     With ``auto_plan`` the sampling pass (plans/sampling.py) runs once
     up front and routes every column to a codec; RLEv2 always remains a
-    candidate so compressed size stays <= the reference's.
+    candidate so each column stays <= its spec-valid RLEv2 size.
 
     Returns {waves_run, waves_skipped, wall_sec}."""
     spark = df.sparkSession

@@ -11,21 +11,18 @@ K_BLOOM_FILTER_UTF8 = 8
 # ColumnEncoding.Kind
 ENC_DIRECT, ENC_DICT, ENC_DIRECT_V2, ENC_DICT_V2 = 0, 1, 2, 3
 
-# ColumnEncoding.Kind extensions: ids outside the spec's 0-3 for streams
-# only this engine decodes.  Native stripes (stripes.encode_stripe)
-# write them and write_orc never does, so an external reader rejects
-# such a column instead of misreading it.  "Compact" RLEv2 may hold
-# patched-base runs with zero patches, which other readers refuse.
-ENC_RLEV2 = 16       # DIRECT_V2 stream layout, compact RLEv2
-ENC_DICT_RLEV2 = 17  # DICTIONARY_V2 stream layout, compact RLEv2
+# ColumnEncoding.Kind extensions: ids outside the spec's 0-3 for codecs
+# beyond the reference's.  Native stripes (stripes.encode_stripe) write
+# them and write_orc never does.  An external reader is NOT guaranteed
+# to reject them: pyarrow 16 (ORC C++ 2.0.0) decodes an ENC_FOR column
+# into wrong values without raising an error.
 ENC_FOR = 18         # int DATA: frame-of-reference
 ENC_BITPACK = 19     # int DATA: flat bit-pack of non-negative ints
 ENC_INT_DICT = 20    # int DATA: integer dictionary
-ENC_FSST = 21        # string DATA: FSST; LENGTH compact RLEv2
+ENC_FSST = 21        # string DATA: FSST; LENGTH RLEv2
 
-ENC_DICTS = (ENC_DICT, ENC_DICT_V2, ENC_DICT_RLEV2)
-ENC_RLE_V2 = (ENC_DIRECT_V2, ENC_DICT_V2, ENC_RLEV2, ENC_DICT_RLEV2,
-              ENC_FSST)
+ENC_DICTS = (ENC_DICT, ENC_DICT_V2)
+ENC_RLE_V2 = (ENC_DIRECT_V2, ENC_DICT_V2, ENC_FSST)
 
 # Type.Kind
 (TK_BOOL, TK_BYTE, TK_SHORT, TK_INT, TK_LONG, TK_FLOAT, TK_DOUBLE,

@@ -38,7 +38,6 @@ from .orc_format import (  # noqa: F401  (shared spec enums)
     ENC_DICT_V2,
     ENC_DIRECT,
     ENC_DIRECT_V2,
-    ENC_RLEV2,
     K_DATA,
     K_DICT_DATA,
     K_LENGTH,
@@ -195,7 +194,7 @@ def _build_types(schema: pa.Schema):
 # column stream encoding (one stripe)
 # ---------------------------------------------------------------------------
 
-def _direct_streams(valid: pa.Array, interop: bool = True) -> list:
+def _direct_streams(valid: pa.Array) -> list:
     """DIRECT_V2 streams of a string/binary array: the concatenated
     bytes and the RLEv2 value lengths."""
     lb = valid.cast(pa.large_binary())
@@ -208,7 +207,7 @@ def _direct_streams(valid: pa.Array, interop: bool = True) -> list:
         blob = bytes(memoryview(dbuf)[offs[0]: offs[-1]]) if dbuf else b""
         lengths = np.diff(offs)
     return [(K_DATA, blob),
-            (K_LENGTH, rle_v2_encode(lengths, signed=False, interop=interop))]
+            (K_LENGTH, rle_v2_encode(lengths, signed=False))]
 
 
 def _dict_pays(valid: pa.Array) -> bool:
@@ -221,8 +220,7 @@ def _dict_pays(valid: pa.Array) -> bool:
     return len(sample.unique()) <= max(len(sample) // 2, 1)
 
 
-def _dictionary_streams(valid: pa.Array,
-                        interop: bool = True) -> tuple[int, list]:
+def _dictionary_streams(valid: pa.Array) -> tuple[int, list]:
     """DICTIONARY_V2 streams of a string/binary array -> (dictionary
     size, streams): RLEv2 indices into the sorted dictionary, RLEv2
     dictionary lengths, dictionary bytes."""
@@ -235,8 +233,8 @@ def _dictionary_streams(valid: pa.Array,
     uniq = [uniq[i] for i in order]
     lengths = np.fromiter(map(len, uniq), np.int64, len(uniq))
     return len(uniq), [
-        (K_DATA, rle_v2_encode(indices, signed=False, interop=interop)),
-        (K_LENGTH, rle_v2_encode(lengths, signed=False, interop=interop)),
+        (K_DATA, rle_v2_encode(indices, signed=False)),
+        (K_LENGTH, rle_v2_encode(lengths, signed=False)),
         (K_DICT_DATA, b"".join(uniq))]
 
 
@@ -319,13 +317,8 @@ class OrcWriter:
     Leaf columns take the reference writer's encodings
     (`src/writer/stripe.rs:173-189`), so any ORC reader decodes the
     file.  `stripes.py` subclasses the writer and overrides the
-    `_ints`/`_strings` hooks and `_interop` with codec auto-selection
-    and extension encodings."""
-
-    # RLEv2 flavour of the LENGTH / int DATA streams: interop, or the
-    # compact one only this engine reads (then list and map columns
-    # record ENC_RLEV2)
-    _interop = True
+    `_ints`/`_strings` hooks with codec auto-selection and extension
+    encodings."""
 
     def __init__(self, path: str, schema: pa.Schema, compression: int = 0,
                  block_size: int = 256 * 1024,
@@ -382,13 +375,10 @@ class OrcWriter:
         self._stripe_stats: list[dict[int, bytes]] = []
         self._n_rows = 0
 
-    def _rle(self, vals: np.ndarray, signed: bool = False) -> bytes:
-        return rle_v2_encode(vals, signed=signed, interop=self._interop)
-
     def _ints(self, cid: int, vals: np.ndarray,
               grouped: bool) -> tuple[int, bytes]:
         """Integer DATA stream -> (column encoding, bytes)."""
-        return ENC_DIRECT_V2, self._rle(vals, signed=True)
+        return ENC_DIRECT_V2, rle_v2_encode(vals, signed=True)
 
     def _strings(self, cid: int, valid: pa.Array, grouped: bool):
         """String/binary streams -> (column encoding, dictionary size,
@@ -446,14 +436,14 @@ class OrcWriter:
             for i, sub in enumerate(subs):
                 recurse(valid.field(i) if cid != 0 else arr.field(i), sub)
         elif kind in (TK_LIST, TK_MAP):
-            enc = ENC_DIRECT_V2 if self._interop else ENC_RLEV2
             if kind == TK_MAP:
                 t = valid.type
                 valid = valid.cast(pa.list_(pa.struct([
                     ("key", t.key_type), ("value", t.item_type)])))
             lengths = valid.value_lengths().to_numpy(zero_copy_only=False)
             out_streams.append((cid, K_LENGTH,
-                                self._rle(lengths.astype(np.int64))))
+                                rle_v2_encode(lengths.astype(np.int64),
+                                              signed=False)))
             flat = valid.flatten()
             if kind == TK_LIST:
                 recurse(flat, subs[0])

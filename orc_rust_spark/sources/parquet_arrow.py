@@ -26,8 +26,6 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.types as T
 
-from ..operators.decode import spark_schema_for
-
 
 def list_fragments(path: str | list[str],
                    row_groups_per_task: int = 1) -> list[tuple[str, list[int]]]:
@@ -57,37 +55,6 @@ def _task_plan(spark: SparkSession, tasks: list[tuple[str, list[int]]],
                       T.StructField("file", T.StringType()),
                       T.StructField("row_groups", T.ArrayType(T.IntegerType()))]),
     ).repartitionByRange(parallelism, "tid")
-
-
-def read_parquet_arrow(spark: SparkSession, path: str,
-                       columns: list[str] | None = None,
-                       row_groups_per_task: int = 1,
-                       tasks_per_slot: int = 4) -> DataFrame:
-    """Distributed pyarrow scan returning a DataFrame; each Spark task
-    reads whole row groups (the stripe analog) straight into Arrow."""
-    tasks = list_fragments(path, row_groups_per_task)
-    if not tasks:
-        raise ValueError(f"no parquet fragments under {path}")
-    schema = pq.read_schema(tasks[0][0])
-    if columns is not None:
-        schema = pa.schema([schema.field(c) for c in columns])
-    out_schema = spark_schema_for(schema)
-
-    plan = _task_plan(spark, tasks, tasks_per_slot)
-
-    cols = columns
-
-    def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            files = b.column("file").to_pylist()
-            groups = b.column("row_groups").to_pylist()
-            for f, rgs in zip(files, groups):
-                pf = pq.ParquetFile(f)
-                tbl = pf.read_row_groups(rgs, columns=cols)
-                for out in tbl.to_batches():
-                    yield out
-
-    return plan.mapInArrow(scan, out_schema)
 
 
 def scan_encode_parquet(spark: SparkSession, path: str,

@@ -9,12 +9,15 @@ column-tree codec.  What makes a stripe native is its leaf codecs: int
 and string columns take the smallest of several codecs, chosen per
 column per stripe by the auto-selection below and recorded in the
 column's ORC ColumnEncoding (the reference's per-column codec slot,
-`src/writer/mod.rs:60-93`).  Codecs beyond the reference's — FoR, int
-dictionary, bit-pack, FSST, and the compact RLEv2 flavour — use
-encoding ids outside ORC's 0-3 (`sources/orc_format.py`), so an
-external ORC reader rejects such a column instead of misreading it.
-RLEv2 (the reference's own choice) always stays a candidate, so each
-column is never larger than the reference would write it.
+`src/writer/mod.rs:60-93`).  RLEv2 and the direct/dictionary string
+layouts are written as ORC's own DIRECT_V2 / DICTIONARY_V2, so a stripe
+whose columns all chose them is a plain ORC file that pyarrow reads.
+Codecs beyond the reference's — FoR, int dictionary, bit-pack, FSST —
+use encoding ids outside ORC's 0-3 (`sources/orc_format.py`).  External
+readers do not reliably reject those ids: pyarrow 16 decodes a FoR
+column into wrong values without an error.  Spec-valid RLEv2 always
+stays a candidate, so each column is never larger than its spec-valid
+RLEv2 encoding.
 """
 
 from __future__ import annotations
@@ -31,11 +34,11 @@ from .kernels.rle_v2 import rle_v2_encode
 from .kernels.util import bits_used_scalar, write_varint_zigzagged
 from .sources.orc_format import (
     ENC_BITPACK,
-    ENC_DICT_RLEV2,
+    ENC_DICT_V2,
+    ENC_DIRECT_V2,
     ENC_FOR,
     ENC_FSST,
     ENC_INT_DICT,
-    ENC_RLEV2,
     K_DATA,
     K_LENGTH,
     TK_BOOL,
@@ -80,9 +83,9 @@ CODEC_NAMES = {
 
 # the ORC column encoding each selectable codec is written as
 _ENCODINGS = {
-    C_RLEV2: ENC_RLEV2, C_FOR: ENC_FOR, C_BITPACK: ENC_BITPACK,
-    C_INT_DICT: ENC_INT_DICT, C_STRING_DIRECT: ENC_RLEV2,
-    C_STRING_DICT: ENC_DICT_RLEV2, C_FSST: ENC_FSST,
+    C_RLEV2: ENC_DIRECT_V2, C_FOR: ENC_FOR, C_BITPACK: ENC_BITPACK,
+    C_INT_DICT: ENC_INT_DICT, C_STRING_DIRECT: ENC_DIRECT_V2,
+    C_STRING_DICT: ENC_DICT_V2, C_FSST: ENC_FSST,
 }
 
 # fixed codec of the column kinds without a choice
@@ -101,8 +104,9 @@ def encode_int_auto(values: np.ndarray, candidates: tuple[int, ...] = (C_RLEV2, 
     """Deterministically pick the smallest encoding among candidates.
 
     RLEv2 (the reference's own choice for int columns,
-    `src/writer/stripe.rs:178-180`) is always a candidate, so the chosen
-    size is <= the reference's compressed size by construction.
+    `src/writer/stripe.rs:178-180`, here always spec-valid) is always a
+    candidate, so the chosen size is <= the column's RLEv2 size by
+    construction.
     Ties break by candidate order (deterministic resume requirement).
     Narrow dtypes (int32 token streams) pass through untouched so the
     RLEv2 batch encoder's 32-bit fast path engages.
@@ -159,14 +163,14 @@ def _encode_string_auto(valid: pa.Array, direct_only: bool = False):
     compression estimate predicts a win; the smallest actual encoding
     is chosen, ties broken deterministically (direct < dict < fsst by
     candidate order).  `direct_only` pins the direct layout."""
-    direct = _direct_streams(valid, interop=False)
+    direct = _direct_streams(valid)
     (_, blob), (_, length_stream) = direct
     best = (C_STRING_DIRECT, 0, direct)
     if direct_only:
         return best
     direct_size = size = len(blob) + len(length_stream)
     if _dict_pays(valid):
-        n_dict, streams = _dictionary_streams(valid, interop=False)
+        n_dict, streams = _dictionary_streams(valid)
         dict_size = sum(len(s) for _, s in streams)
         if dict_size < size:
             best, size = (C_STRING_DICT, n_dict, streams), dict_size
@@ -180,8 +184,9 @@ def _encode_string_auto(valid: pa.Array, direct_only: bool = False):
     # FSST code covers at most MAX_LEN == 8 input bytes, so 8x is
     # FSST's ceiling on the DATA stream before table overhead — it
     # cannot beat such a dictionary, and training it was a pure
-    # per-stripe fixed cost on low-cardinality columns.  RLEv2/dict
-    # stay in the race, so chosen size remains <= the reference's.
+    # per-stripe fixed cost on low-cardinality columns.  Direct and
+    # dict stay in the race, so the chosen size remains <= the
+    # spec-valid direct/dictionary layouts'.
     dict_crushed = best[0] == C_STRING_DICT and size * 8 <= direct_size
     if len(blob) >= 2048 and not dict_crushed:
         data_np = np.frombuffer(blob, dtype=np.uint8)
@@ -205,7 +210,7 @@ class ColumnPlan:
     """Per-column codec routing from the sampling pass.  The planned
     codec narrows the candidate set but RLEv2 (the reference's own
     encoding) always stays in the race, so the chosen size remains <=
-    the reference's compressed size on every stripe."""
+    the column's spec-valid RLEv2 size on every stripe."""
     codec: int | None = None
 
     def candidates(self) -> tuple[int, ...] | None:
@@ -222,7 +227,6 @@ class _NativeWriter(OrcWriter):
     ints, or a list column's elements.  Row-index mode pins every
     group to RLEv2 / direct strings, since one column encoding must
     cover all groups."""
-    _interop = False
 
     def __init__(self, sink, schema: pa.Schema,
                  plans: dict[str, ColumnPlan] | None = None, **kw):

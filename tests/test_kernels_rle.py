@@ -25,7 +25,11 @@ from orc_rust_spark.kernels.for_codec import (
     int_dict_encode,
 )
 from orc_rust_spark.kernels.rle_v1 import rle_v1_decode, rle_v1_encode
-from orc_rust_spark.kernels.rle_v2 import rle_v2_decode, rle_v2_encode
+from orc_rust_spark.kernels.rle_v2 import (
+    rle_v2_decode,
+    rle_v2_decode_ref,
+    rle_v2_encode,
+)
 
 I64 = np.int64
 
@@ -95,6 +99,22 @@ def test_rlev2_golden_signed_direct():
 def test_rlev2_golden_patched_base_java():
     got = rle_v2_decode(PATCHED_BASE_1_DATA, len(PATCHED_BASE_1_EXPECTED), signed=True)
     assert list(got) == PATCHED_BASE_1_EXPECTED
+
+
+# a patched-base run with zero patches (pl==0), as the reference writer
+# emits it (no encoder here writes this form; files it wrote carry it)
+PATCHED_BASE_PL0_DATA = bytes.fromhex(
+    "a00906001001d1803b801d000000163c33c803a402ff00ed1d7c80")
+PATCHED_BASE_PL0_EXPECTED = [947, 254, 248, 16, 727, 68866, 482, 783, 490,
+                             30210]
+
+
+@pytest.mark.parametrize("decode", [rle_v2_decode, rle_v2_decode_ref])
+def test_rlev2_golden_patched_base_zero_patches(decode):
+    assert PATCHED_BASE_PL0_DATA[3] & 0x1F == 0  # pl field
+    got = decode(PATCHED_BASE_PL0_DATA, len(PATCHED_BASE_PL0_EXPECTED),
+                 signed=False)
+    assert list(got) == PATCHED_BASE_PL0_EXPECTED
 
 
 def _roundtrip_v2(arr, signed=True, width_bits=64):

@@ -1,37 +1,39 @@
-"""String direct/dictionary + float codec tests."""
+"""String direct/dictionary + float codec tests.  Strings go through
+the product path: native stripes and the ORC writer's stream builders."""
 
 import numpy as np
+import pyarrow as pa
 from hypothesis import given, settings, strategies as st
 
 from orc_rust_spark.kernels.float_codec import float_decode, float_encode
-from orc_rust_spark.kernels.string_codec import (
-    string_dict_decode,
-    string_dict_encode,
-    string_direct_decode,
-    string_direct_encode,
-)
+from orc_rust_spark.sources.orc_format import K_DICT_DATA
+from orc_rust_spark.sources.orc_writer import _dictionary_streams
+from orc_rust_spark.stripes import decode_stripe, encode_stripe
+
+
+def _stripe_roundtrip(vals: list[bytes]) -> list[bytes]:
+    batch = pa.record_batch({"s": pa.array(vals, pa.binary())})
+    return decode_stripe(encode_stripe(batch)).column(0).to_pylist()
 
 
 @settings(max_examples=100, deadline=None)
 @given(st.lists(st.binary(min_size=0, max_size=40), min_size=1, max_size=300))
 def test_string_direct_roundtrip(vals):
-    data, lens = string_direct_encode(vals)
-    assert string_direct_decode(data, lens, len(vals)) == vals
+    assert _stripe_roundtrip(vals) == vals
 
 
 @settings(max_examples=100, deadline=None)
 @given(st.lists(st.sampled_from([b"abc", b"efgh", b"", b"zz", "é中".encode()]),
                 min_size=1, max_size=300))
 def test_string_dict_roundtrip(vals):
-    idx, dlens, blob = string_dict_encode(vals)
-    n_dict = len(set(vals))
-    assert string_dict_decode(idx, dlens, blob, len(vals), n_dict) == vals
+    assert _stripe_roundtrip(vals) == vals
 
 
 def test_string_dict_sorted():
     # ORC requires the dictionary blob sorted (string.rs:205-207)
-    idx, dlens, blob = string_dict_encode([b"efgh", b"abc"] * 32)
-    assert blob == b"abcefgh"
+    _, streams = _dictionary_streams(pa.array([b"efgh", b"abc"] * 32,
+                                              pa.binary()))
+    assert dict(streams)[K_DICT_DATA] == b"abcefgh"
 
 
 @settings(max_examples=50, deadline=None)

@@ -65,14 +65,54 @@ def test_write_lineitem_roundtrip(tmp_path):
 
 def test_write_zipf_tokens_interop_guard(tmp_path):
     """Zipf-shaped data triggers the reference encoder's unguarded
-    5-bit patch-list edge (pl==0); the interop writer must re-route
-    those blocks so external readers accept the file."""
+    5-bit patch-list edge (pl==0); the writer must re-route those
+    blocks so external readers accept the file — in int DATA streams
+    and in a timestamp column's seconds stream alike."""
     rng = np.random.default_rng(11)
     flat = ((rng.zipf(1.3, 500_000) - 1) % 50257).astype(np.int32)
     tbl = pa.table({"tok": pa.array(flat)})
     path = str(tmp_path / "tokens.orc")
     write_orc(path, tbl, compression=1)
     _assert_tables_equal(po.ORCFile(path).read(), tbl, "tokens")
+
+    offs = (np.random.default_rng(3).zipf(1.3, 20_000) - 1) % 50257
+    ts = pa.table({"ts": pa.array((1420070400 + offs) * 1_000_000,
+                                  pa.timestamp("us"))})
+    path = str(tmp_path / "ts.orc")
+    write_orc(path, ts, compression=1)
+    _assert_tables_equal(po.ORCFile(path).read(), ts, "ts")
+
+
+def test_native_stripe_of_reference_codecs_pyarrow_reads_it():
+    """A native stripe whose columns all chose reference encodings
+    (RLEv2, string dictionary) is a plain ORC file: every column
+    encoding is one of ORC's 0-3 and pyarrow decodes it value-equal."""
+    from orc_rust_spark.sources.orc_reader import (_stripe_layout,
+                                                   read_metadata)
+    from orc_rust_spark.stripes import C_RLEV2, ColumnPlan, encode_stripe
+
+    rng = np.random.default_rng(7)
+    n = 4000
+    lens = rng.integers(0, 60, n)
+    toks = ((rng.zipf(1.3, int(lens.sum())) - 1) % 50257).astype(np.int32)
+    offsets = np.concatenate(([0], np.cumsum(lens))).astype(np.int32)
+    batch = pa.record_batch({
+        "tokens": pa.ListArray.from_arrays(pa.array(offsets),
+                                           pa.array(toks)),
+        "n": pa.array(rng.integers(-2**40, 2**40, n)),
+        "src": pa.array(np.array(["web", "code", "books"])[
+            rng.integers(0, 3, n)]),
+    })
+    plans = {"tokens": ColumnPlan(C_RLEV2), "n": ColumnPlan(C_RLEV2)}
+    codecs: dict = {}
+    blob = encode_stripe(batch, plans, _codecs=codecs)
+    assert codecs == {"tokens": "rlev2", "n": "rlev2",
+                      "src": "string_dict"}
+    meta = read_metadata(blob)
+    _, encs, _ = _stripe_layout(memoryview(blob), meta, meta.stripes[0])
+    assert encs and all(0 <= e[0] <= 3 for e in encs.values())
+    _assert_tables_equal(po.ORCFile(pa.BufferReader(blob)).read(),
+                         pa.Table.from_batches([batch]), "native")
 
 
 def test_write_empty_and_tiny(tmp_path):
