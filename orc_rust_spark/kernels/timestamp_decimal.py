@@ -92,21 +92,6 @@ def timestamp_encode_us(micros_since_epoch: np.ndarray,
     return _timestamp_encode_parts(seconds, nanos, base_seconds)
 
 
-def timestamp_decode_us(data_stream, secondary_stream, n: int,
-                        base_seconds: int = ORC_TS_BASE_SECONDS) -> np.ndarray:
-    """Decode to int64 µs since the unix epoch without the ns-int64
-    intermediate (exact inverse of `timestamp_encode_us`)."""
-    seconds = rle_v2_decode(data_stream, n, signed=True) + np.int64(base_seconds)
-    raw = rle_v2_decode(secondary_stream, n, signed=False)
-    zeros = (raw & np.int64(7)).astype(np.int64)
-    base = (raw >> np.int64(3)).astype(np.int64)
-    scale = np.power(10, np.where(zeros != 0, zeros + 1, 0)).astype(np.int64)
-    nanos = base * scale
-    adjust = (seconds < 0) & (nanos > 999_999)
-    seconds = np.where(adjust, seconds - 1, seconds)
-    return seconds * np.int64(1_000_000) + nanos // np.int64(1000)
-
-
 def timestamp_encode(nanos_since_epoch: np.ndarray,
                      base_seconds: int = ORC_TS_BASE_SECONDS
                      ) -> tuple[bytes, bytes]:

@@ -21,34 +21,6 @@ import pyspark.sql.types as T
 
 from ..stripes import decode_stripe
 
-_SPARK_TYPES = {
-    pa.int8(): T.ByteType(), pa.int16(): T.ShortType(), pa.int32(): T.IntegerType(),
-    pa.int64(): T.LongType(), pa.float32(): T.FloatType(), pa.float64(): T.DoubleType(),
-    pa.string(): T.StringType(), pa.binary(): T.BinaryType(), pa.bool_(): T.BooleanType(),
-    pa.date32(): T.DateType(), pa.timestamp("us"): T.TimestampNTZType(),
-}
-
-
-def _spark_type(t: pa.DataType) -> T.DataType:
-    if t in _SPARK_TYPES:
-        return _SPARK_TYPES[t]
-    if pa.types.is_list(t) or pa.types.is_large_list(t):
-        return T.ArrayType(_spark_type(t.value_type))
-    if pa.types.is_map(t):
-        return T.MapType(_spark_type(t.key_type), _spark_type(t.item_type))
-    if pa.types.is_struct(t):
-        return T.StructType([
-            T.StructField(t.field(i).name, _spark_type(t.field(i).type), True)
-            for i in range(t.num_fields)])
-    if pa.types.is_decimal(t):
-        return T.DecimalType(t.precision, t.scale)
-    raise TypeError(f"no Spark type for {t}")
-
-
-def spark_schema_for(pa_schema: pa.Schema) -> T.StructType:
-    return T.StructType([
-        T.StructField(f.name, _spark_type(f.type), True) for f in pa_schema])
-
 
 def decode_pass(stripes: DataFrame, out_schema: T.StructType,
                 columns: list[str] | None = None) -> DataFrame:

@@ -22,6 +22,7 @@ import pyarrow as pa
 
 from pyspark import TaskContext
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 import pyspark.sql.types as T
 
 from ..stripes import ColumnPlan, encode_stripe
@@ -43,14 +44,7 @@ STRIPE_SCHEMA = T.StructType([
 
 MANIFEST_COLUMNS = [f.name for f in STRIPE_SCHEMA.fields if f.name != "blob"]
 
-_STRIPE_PA_SCHEMA = pa.schema([
-    ("stripe_id", pa.string()), ("part_id", pa.int32()), ("seq", pa.int32()),
-    ("n_rows", pa.int64()), ("n_tokens", pa.int64()),
-    ("input_bytes", pa.int64()), ("output_bytes", pa.int64()),
-    ("codecs", pa.string()), ("checksum", pa.string()),
-    ("doc_id_min", pa.string()), ("doc_id_max", pa.string()),
-    ("blob", pa.binary()),
-])
+_STRIPE_PA_SCHEMA = to_arrow_schema(STRIPE_SCHEMA)
 
 
 def _stripe_row(tbl: pa.Table, part_id: int, seq: int,

@@ -21,9 +21,11 @@ import pyarrow as pa
 
 from pyspark import TaskContext
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 import pyspark.sql.types as T
 
-from ..stripes import ColumnPlan, decode_stripe, encode_stripe
+from ..stripes import ColumnPlan, encode_stripe
+from .decode import decode_pass
 
 RELATION_STRIPE_SCHEMA = T.StructType([
     T.StructField("stripe_id", T.StringType(), False),
@@ -33,11 +35,7 @@ RELATION_STRIPE_SCHEMA = T.StructType([
     T.StructField("blob", T.BinaryType(), False),
 ])
 
-_RELATION_PA_SCHEMA = pa.schema([
-    ("stripe_id", pa.string()), ("n_rows", pa.int64()),
-    ("input_bytes", pa.int64()), ("output_bytes", pa.int64()),
-    ("blob", pa.binary()),
-])
+_RELATION_PA_SCHEMA = to_arrow_schema(RELATION_STRIPE_SCHEMA)
 
 
 def encode_relation(df: DataFrame, stripe_rows: int = 65536,
@@ -81,20 +79,6 @@ def encode_relation(df: DataFrame, stripe_rows: int = 65536,
     return df.mapInArrow(encode_partition, RELATION_STRIPE_SCHEMA)
 
 
-def decode_relation(stripes: DataFrame, out_schema: T.StructType,
-                    columns: list[str] | None = None) -> DataFrame:
-    """Decode stripe rows back to relation rows, optionally projecting."""
-    blob_df = stripes.select("blob")
-
-    def decode_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            col = batch.column("blob")
-            for i in range(batch.num_rows):
-                yield decode_stripe(col[i].as_buffer(), columns=columns)
-
-    return blob_df.mapInArrow(decode_partition, out_schema)
-
-
 def roundtrip_relation(df: DataFrame, stripe_rows: int = 65536,
                        columns: list[str] | None = None,
                        plans: dict[str, ColumnPlan] | None = None) -> DataFrame:
@@ -105,5 +89,5 @@ def roundtrip_relation(df: DataFrame, stripe_rows: int = 65536,
     """
     fields = [T.StructField(f.name, f.dataType, True) for f in df.schema.fields
               if columns is None or f.name in columns]
-    return decode_relation(encode_relation(df, stripe_rows, plans),
-                           T.StructType(fields), columns)
+    return decode_pass(encode_relation(df, stripe_rows, plans),
+                       T.StructType(fields), columns)

@@ -2,8 +2,9 @@
 manifest, with idempotent resume.
 
 Scale design (north_rule): the corpus is split into `waves` of disjoint
-doc_id ranges (boundaries from a deterministic seeded sample, the same
-scheme Spark's RangePartitioner uses).  Each wave is one Spark job whose
+doc_id ranges (boundaries at the quantiles of a deterministic
+stride-based sample, as Spark's RangePartitioner splits its sample).
+Each wave is one Spark job whose
 output directory commit (parquet `_SUCCESS`) is the checkpoint; a re-run
 skips completed waves, so a driver/executor kill between waves resumes
 exactly after the last committed stripe set.  Within a wave,
@@ -26,17 +27,12 @@ from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 
-from ..operators.decode import decode_pass, spark_schema_for
+from ..operators.decode import decode_pass
 from ..operators.encode import MANIFEST_COLUMNS, encode_pass
 from ..functions.tokens import TOKEN_SCHEMA
 from ..stripes import ColumnPlan
 
 import pyarrow as pa
-
-TOKEN_PA_SCHEMA = pa.schema([
-    ("doc_id", pa.string()), ("tokens", pa.list_(pa.int32())),
-    ("n_tok", pa.int32()), ("source", pa.string()),
-])
 
 
 def _plan_sample(df: DataFrame, cap_per_part: int = 4096,
@@ -128,13 +124,12 @@ def _plan_sample(df: DataFrame, cap_per_part: int = 4096,
     return sampled.repartition(1).mapInArrow(merge, schema).toPandas()
 
 
-def weighted_repartition(df: DataFrame, partitions: int,
-                         seed: int = 42) -> DataFrame:
+def weighted_repartition(df: DataFrame, partitions: int) -> DataFrame:
     """Range-partition by doc_id with TOKEN-MASS-balanced boundaries.
 
     `repartitionByRange` balances row counts; with lognormal-heavy-tail
     token lengths (FIXTURES F1) a few huge docs then skew stripe sizes
-    and task times.  Here a seeded sample of (doc_id, n_tok) yields
+    and task times.  Here a stride-based sample of (doc_id, n_tok) yields
     boundaries at equal cumulative-token quantiles and a vectorized
     mapInArrow assigns each row its bucket by binary search.  Placement
     uses `repartition(n, key)` on per-bucket salt values pre-solved
@@ -192,7 +187,7 @@ def weighted_repartition(df: DataFrame, partitions: int,
             .drop("pid"))
 
 
-def _wave_boundaries(df: DataFrame, waves: int, seed: int = 42) -> list[str]:
+def _wave_boundaries(df: DataFrame, waves: int) -> list[str]:
     """Deterministic doc_id quantile boundaries from a single-pass
     weighted sample (no count job)."""
     import numpy as np
@@ -216,7 +211,6 @@ def encode_corpus(
     plans: dict[str, ColumnPlan] | None = None,
     auto_plan: bool = False,
     weighted: bool = False,
-    seed: int = 42,
 ) -> dict:
     """Encode a token DataFrame to `out_dir` (one subdir per wave).
 
@@ -231,7 +225,7 @@ def encode_corpus(
         from .sampling import column_stats, plan_codecs
         plans = plan_codecs(column_stats(df))
     partitions = partitions or spark.sparkContext.defaultParallelism
-    bounds = _wave_boundaries(df, waves, seed)
+    bounds = _wave_boundaries(df, waves)
     waves_run = 0
     waves_skipped = 0
     for w in range(max(waves, 1)):
@@ -249,7 +243,7 @@ def encode_corpus(
                 sub = sub.filter(F.col("doc_id") < hi)
         per_wave_parts = max(partitions // max(waves, 1), 1) if waves > 1 else partitions
         if weighted:
-            sub = weighted_repartition(sub, per_wave_parts, seed)
+            sub = weighted_repartition(sub, per_wave_parts)
         else:
             sub = sub.repartitionByRange(per_wave_parts, "doc_id") \
                      .sortWithinPartitions("doc_id")
@@ -284,8 +278,8 @@ def decode_corpus(
             stripes = stripes.filter(F.col("doc_id_max") >= lo)
         if hi is not None:
             stripes = stripes.filter(F.col("doc_id_min") <= hi)
-    out_schema = TOKEN_SCHEMA if columns is None else spark_schema_for(
-        pa.schema([f for f in TOKEN_PA_SCHEMA if f.name in columns]))
+    out_schema = TOKEN_SCHEMA if columns is None else T.StructType(
+        [f for f in TOKEN_SCHEMA.fields if f.name in columns])
     df = decode_pass(stripes, out_schema, columns)
     if doc_id_range is not None and (columns is None or "doc_id" in (columns or [])):
         lo, hi = doc_id_range

@@ -4,7 +4,7 @@ DuckDB oracle SQL) pair for the driver's correctness gate.
 Three groups:
 
 1. **Codec engine round-trips** — each `/root/testdata` table is pushed
-   through encode_relation -> decode_relation (the engine's
+   through encode_relation -> decode_pass (the engine's
    ArrowWriter/ArrowReader analog, SURVEY §2.3) and returned; the oracle
    is an identity SELECT, so the driver's value-hash compares *every
    decoded cell* against the parquet ground truth.

@@ -1032,6 +1032,7 @@ def read_orc(path, columns: list[str] | None = None,
     # column id of a root child is its subtype index
     col_to_cid = {nm: root_cids[i] for i, nm in enumerate(names)}
     pred = _as_predicate(predicate, meta)
+    may_match = set(stripes_matching(meta, pred))
     want_stripes = set(stripe_indices) if stripe_indices is not None else None
     sel_rest = None
     if row_selection is not None:
@@ -1055,15 +1056,8 @@ def read_orc(path, columns: list[str] | None = None,
             continue
         if ssel is not None and not ssel.selects_any():
             continue
-        if pred is not None and sidx < len(meta.stripe_stats):
-            stats = meta.stripe_stats[sidx]
-
-            def stats_of(col, _stats=stats):
-                cid = col_to_cid.get(col)
-                return _stats.get(cid) if cid is not None else None
-
-            if not pred.evaluate(stats_of):
-                continue
+        if sidx not in may_match:
+            continue
         # sub-stripe skip: with a predicate or selection and a row
         # index, decode only the row groups whose statistics may match
         # and whose selection slice selects rows

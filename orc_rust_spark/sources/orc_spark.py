@@ -3,11 +3,12 @@
 backed by the kernel-level `orc_reader.py` / `orc_writer.py`.
 
 Read path: files are listed on the driver (cheap metadata-only tail
-parse), distributed one-file-per-task with the same exact-layout range
-partitioning as the parquet scan, and decoded to Arrow inside the
-worker — no JVM ORC dependency, no row-format round-trip.  At scale the
-parallelism unit is the file (stripe-granular splitting would follow
-the same `_task_plan` shape).
+parse), split into (file, stripe subset) tasks, and decoded to Arrow
+inside the worker — no JVM ORC dependency, no row-format round-trip.
+The Spark schema is pyspark's own mapping of the file's Arrow schema
+(`from_arrow_schema`, timestamps as TIMESTAMP_NTZ), and each task
+casts its table to that schema's Arrow form (`to_arrow_schema`), so
+the Arrow<->Spark type mapping is defined in one place.
 
 Write path: each partition writes one `.orc` file (one stripe per
 Arrow batch group) and emits a manifest row (path, rows, bytes) — the
@@ -25,9 +26,9 @@ from collections.abc import Iterator
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 import pyspark.sql.types as T
 
-from ..operators.decode import spark_schema_for
 from .orc_reader import (arrow_schema, read_metadata, read_orc,
                          stripes_matching)
 from .orc_writer import OrcWriter
@@ -87,7 +88,8 @@ def read_orc_spark(spark: SparkSession, path: str,
     values written by foreign writers ERROR with a clear message
     instead of silently truncating (`src/encoding/timestamp.rs:170-177`
     policy); far-past/future instants that overflow int64 µs read
-    exactly via 'decimal'.
+    exactly via 'decimal'.  'ms' and 's' values are decoded at that
+    unit, then widened to Spark's µs timestamps.
 
     Tasks are (file, stripe subset) byte-range splits of ~`split_bytes`
     (`src/arrow_reader.rs:357-372`): one big multi-stripe file fans out
@@ -106,7 +108,10 @@ def read_orc_spark(spark: SparkSession, path: str,
             " lossless representation)")
     probe_schema = arrow_schema(read_metadata(files[0]), columns,
                                 timestamp_precision)
-    out_schema = spark_schema_for(_normalize_schema(probe_schema))
+    out_schema = from_arrow_schema(probe_schema, prefer_timestamp_ntz=True)
+    # mapInArrow accepts only the Arrow form of out_schema (µs
+    # timestamps), so every task casts its ms/s-unit table to it
+    pa_schema = to_arrow_schema(out_schema)
 
     sel_rest = None
     if row_selection is not None:
@@ -175,42 +180,13 @@ def read_orc_spark(spark: SparkSession, path: str,
                 sel = RowSelection([RowSelector(n, k)
                                     for n, k in zip(cnts, skips)]) \
                     if cnts is not None else None
-                tbl = _normalize(read_orc(
+                tbl = read_orc(
                     f, columns=columns, predicate=predicate,
                     stripe_indices=ids, row_selection=sel,
-                    timestamp_precision=timestamp_precision))
-                yield from tbl.to_batches()
+                    timestamp_precision=timestamp_precision)
+                yield from tbl.cast(pa_schema).to_batches()
 
     return plan.mapInArrow(scan, out_schema)
-
-
-def _ns_to_us(t: pa.DataType) -> pa.DataType:
-    """ORC timestamps are ns-precision; Spark's Arrow bridge wants µs.
-    Recurses through struct/list/map so nested timestamps normalize
-    too (a top-level-only rewrite left ns batches that failed the
-    mapInArrow schema match)."""
-    if pa.types.is_timestamp(t) and t.unit == "ns":
-        return pa.timestamp("us")
-    if pa.types.is_list(t):
-        return pa.list_(_ns_to_us(t.value_type))
-    if pa.types.is_large_list(t):
-        return pa.large_list(_ns_to_us(t.value_type))
-    if pa.types.is_map(t):
-        return pa.map_(_ns_to_us(t.key_type), _ns_to_us(t.item_type))
-    if pa.types.is_struct(t):
-        return pa.struct([pa.field(f.name, _ns_to_us(f.type), f.nullable)
-                          for f in t])
-    return t
-
-
-def _normalize_schema(schema: pa.Schema) -> pa.Schema:
-    return pa.schema([pa.field(f.name, _ns_to_us(f.type), f.nullable)
-                      for f in schema])
-
-
-def _normalize(tbl: pa.Table) -> pa.Table:
-    target = _normalize_schema(tbl.schema)
-    return tbl.cast(target) if target != tbl.schema else tbl
 
 
 ORC_MANIFEST_SCHEMA = T.StructType([

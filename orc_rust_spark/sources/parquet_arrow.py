@@ -27,20 +27,20 @@ from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.types as T
 
 
-def list_fragments(path: str | list[str],
-                   row_groups_per_task: int = 1) -> list[tuple[str, list[int]]]:
-    """(file, row-group ids) task descriptions for parquet dir/file(s)."""
+# task rows per executor slot: enough partitions that a slow task
+# does not hold back a whole slot's share of the scan
+_TASKS_PER_SLOT = 4
+
+
+def list_fragments(path: str | list[str]) -> list[tuple[str, list[int]]]:
+    """(file, [row-group id]) task descriptions for parquet dir/file(s),
+    one row group per task."""
     dataset = pads.dataset(path, format="parquet")
-    tasks: list[tuple[str, list[int]]] = []
-    for frag in dataset.get_fragments():
-        rgs = [rg.id for rg in frag.row_groups]
-        for i in range(0, len(rgs), row_groups_per_task):
-            tasks.append((frag.path, rgs[i: i + row_groups_per_task]))
-    return tasks
+    return [(frag.path, [rg.id]) for frag in dataset.get_fragments()
+            for rg in frag.row_groups]
 
 
-def _task_plan(spark: SparkSession, tasks: list[tuple[str, list[int]]],
-               tasks_per_slot: int = 4):
+def _task_plan(spark: SparkSession, tasks: list[tuple[str, list[int]]]):
     """Task-description DataFrame with an EXACT layout: range-partition
     on the task index so every partition holds the same number of task
     rows.  Plain ``repartition(n)`` round-robins from arbitrary input
@@ -48,7 +48,7 @@ def _task_plan(spark: SparkSession, tasks: list[tuple[str, list[int]]],
     and piles 2-3 tasks on others — measured 3x wall-time loss on the
     fused scan+encode stage (the straggler partitions serialize)."""
     parallelism = min(len(tasks),
-                      spark.sparkContext.defaultParallelism * tasks_per_slot)
+                      spark.sparkContext.defaultParallelism * _TASKS_PER_SLOT)
     return spark.createDataFrame(
         [(i, f, rgs) for i, (f, rgs) in enumerate(tasks)],
         T.StructType([T.StructField("tid", T.IntegerType()),
@@ -59,19 +59,17 @@ def _task_plan(spark: SparkSession, tasks: list[tuple[str, list[int]]],
 
 def scan_encode_parquet(spark: SparkSession, path: str,
                         stripe_tokens: int = 1 << 21,
-                        plans=None, block_compression: int = 0,
-                        row_groups_per_task: int = 1,
-                        tasks_per_slot: int = 4) -> DataFrame:
+                        plans=None, block_compression: int = 0) -> DataFrame:
     """Fused scan+encode: each task reads its parquet row groups with
     pyarrow and encodes stripes in the same Python process — one Python
     stage, zero JVM row-format round-trips for the token arrays."""
     from pyspark import TaskContext
     from ..operators.encode import STRIPE_SCHEMA, encode_batches
 
-    tasks = list_fragments(path, row_groups_per_task)
+    tasks = list_fragments(path)
     if not tasks:
         raise ValueError(f"no parquet fragments under {path}")
-    plan = _task_plan(spark, tasks, tasks_per_slot)
+    plan = _task_plan(spark, tasks)
 
     def scan_encode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         ctx = TaskContext.get()

@@ -61,9 +61,10 @@ def test_orc_file_stats(spark, tmp_path):
 
 
 def test_read_nested_timestamp_normalizes(spark, tmp_path):
-    """ns->us normalization must recurse into struct/list fields, not
-    just top-level timestamps (ADVICE r2: nested ns broke the
-    mapInArrow schema match)."""
+    """Timestamps nested in struct/list fields read back through the
+    Spark source: the task's table must match the Arrow form of the
+    Spark schema at every depth, not only at top level (ADVICE r2:
+    nested ns timestamps broke the mapInArrow schema match)."""
     import datetime as dt
     out = str(tmp_path / "orc_nested_ts")
     import os

@@ -139,7 +139,9 @@ def test_read_orc_spark_timestamp_precision(tmp_path):
     """The distributed source's precision surface: whole-us foreign
     timestamps read at the 'us' default; sub-us values ERROR with the
     clear precision message instead of an opaque Arrow cast failure;
-    'decimal' reads them losslessly as DecimalType(38,9)."""
+    'decimal' reads them losslessly as DecimalType(38,9); whole-second
+    values, top-level and nested, read at every unit ('ms' and 's'
+    tables must be cast to µs, the only unit mapInArrow accepts)."""
     import pytest
     from pyspark.sql import SparkSession
     from orc_rust_spark.sources.orc_spark import read_orc_spark
@@ -172,3 +174,23 @@ def test_read_orc_spark_timestamp_precision(tmp_path):
                   for r in read_orc_spark(spark, str(d2)).collect())
     assert got2 == ["1970-01-01T00:00:00.001000",
                     "1970-01-01T00:00:00.002000"]
+
+    # whole-second values at every unit, top-level and in a list: 'ms'
+    # and 's' tables are cast to Spark's µs timestamps by the task
+    d3 = tmp_path / "ts3"
+    d3.mkdir()
+    secs = [1_000_000_000, 2_000_000_000, None]
+    po.write_table(pa.table({
+        "k": pa.array([0, 1, 2], pa.int32()),
+        "t": pa.array(secs, pa.timestamp("ns")),
+        "ts": pa.array([[v] for v in secs],
+                       pa.list_(pa.timestamp("ns")))}), str(d3 / "a.orc"))
+    iso = ["1970-01-01T00:00:01", "1970-01-01T00:00:02", None]
+    for unit in ("us", "ms", "s", "decimal"):
+        rows = read_orc_spark(spark, str(d3), timestamp_precision=unit) \
+            .orderBy("k").collect()
+        want = [Decimal(1), Decimal(2), None] if unit == "decimal" else iso
+        for got in ([r["t"] for r in rows], [r["ts"][0] for r in rows]):
+            if unit != "decimal":
+                got = [None if v is None else v.isoformat() for v in got]
+            assert got == want, unit
